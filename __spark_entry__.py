@@ -43,28 +43,28 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # result), so each registry call RELEASES THE PREVIOUS call's pins and
 # records its own — a long-lived session running entries back-to-back
 # retains at most one entry's worth of cached frames instead of
-# accumulating them for the session lifetime. release_pins() drops the
-# last one.
-_PIN_LEDGER: list[DataFrame] = []
-# ledger ops are lock-guarded: concurrent registry calls (the contract
-# test's thread pool) would otherwise race the pop-until-empty loop
-# (IndexError between the emptiness check and the pop). Unpersisting a
-# frame another in-flight entry still reads is safe — Spark recomputes
-# uncached blocks — so the lock only has to make the LIST operations
-# atomic, not serialize entry execution.
+# accumulating them for the session lifetime. The ledger is keyed by
+# thread: under the contract test's thread pool an entry releases only
+# its own thread's earlier pins, never the intermediates of an entry
+# still running on another thread. The lock makes the dict operations
+# atomic; it does not serialize entry execution.
+_PIN_LEDGER: dict[int, list[DataFrame]] = {}
 _PIN_LOCK = threading.Lock()
 
 
 def release_pins() -> None:
-    """Unpersist every intermediate frame still pinned by the most
-    recent registry call. Idempotent; safe any time."""
+    """Unpersist every intermediate frame still pinned by the calling
+    thread's most recent registry call, and by threads that have
+    exited (they cannot release their own). Idempotent; safe any
+    time."""
     from etl_gcp_spark.caching import unpersist_pinned
 
-    while True:
-        with _PIN_LOCK:
-            if not _PIN_LEDGER:
-                return
-            df = _PIN_LEDGER.pop()
+    me = threading.get_ident()
+    live = {t.ident for t in threading.enumerate()}
+    with _PIN_LOCK:
+        mine = [k for k in _PIN_LEDGER if k == me or k not in live]
+        frames = [df for k in mine for df in _PIN_LEDGER.pop(k)]
+    for df in frames:
         unpersist_pinned(df)
 
 
@@ -75,7 +75,7 @@ def _ledgered(fn):
         df = fn(spark, sf_dir)
         if getattr(df, "_etl_pinned_frames", ()):
             with _PIN_LOCK:
-                _PIN_LEDGER.append(df)
+                _PIN_LEDGER.setdefault(threading.get_ident(), []).append(df)
         return df
 
     return run
@@ -866,6 +866,10 @@ def _q_freshness(spark, sf_dir):
     )
 
 
+_SIDE_LOCKS: dict[str, threading.Lock] = {}
+_SIDE_LOCKS_GUARD = threading.Lock()
+
+
 def _oracle_side_write(df, name: str) -> None:
     """Materialize a hash side table for a DuckDB oracle replay.
 
@@ -886,7 +890,15 @@ def _oracle_side_write(df, name: str) -> None:
     """
     if os.environ.get("SPARK_GRAFT_SKIP_ORACLE_SIDE_WRITE") == "1":
         return
-    df.write.mode("overwrite").parquet(_oracle_side_path(name))
+    # two entries may share a side table (simhash_fingerprints and
+    # simhash_pairs both write simhash_tokens); run concurrently, one
+    # overwrite would delete the other's _temporary mid-write. The path
+    # stays fixed because the oracles read it, so writes to one name
+    # take turns instead.
+    with _SIDE_LOCKS_GUARD:
+        lock = _SIDE_LOCKS.setdefault(name, threading.Lock())
+    with lock:
+        df.write.mode("overwrite").parquet(_oracle_side_path(name))
 
 
 def _oracle_side_path(name: str) -> str:
@@ -1640,13 +1652,10 @@ def _q_dedup_clusters(spark, sf_dir):
 def _q_dedup_clusters_star(spark, sf_dir):
     from etl_gcp_spark.operators.graph import dedup_clusters
 
-    # the O(log^2 n)-round large-star/small-star closure, end-to-end:
-    # identical min-id labeling as propagation, so the same
-    # recursive-CTE oracle attaches — the long-chain-safe path gets
-    # its own hash-checked row instead of pytest-only coverage
-    return dedup_clusters(
-        _t(spark, sf_dir, "documents"), threshold=0.8, cc_engine="star"
-    )
+    # kept under its name for the driver contract: the large-star /
+    # small-star engine it ran is retired, since the local-contraction
+    # kernel's round count no longer depends on component diameter
+    return dedup_clusters(_t(spark, sf_dir, "documents"), threshold=0.8)
 
 
 def _q_ngram_jaccard(spark, sf_dir):
@@ -6278,8 +6287,8 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id, cluster_id, quality_score
             FROM ranked WHERE rn = 1
         """,
-        # star-contraction closure: identical min-id labeling ->
-        # identical oracle as dedup_clusters
+        # the same operator as dedup_clusters under its kept name ->
+        # identical oracle
         "dedup_clusters_star": f"""
             WITH RECURSIVE pairs AS (
                 SELECT id1, id2 FROM ({_JACCARD_PAIRS})
@@ -8827,7 +8836,7 @@ def oracle_sql() -> dict[str, str]:
     # mmr_select state-carrying pattern; VERDICT r5 item 4). Each
     # round hooks every node to the min label in its neighborhood,
     # then pointer-jumps twice (st[h], st[st[h]]) — the same
-    # hook+compress scheme as the ENGINE side's star contraction
+    # hook+compress scheme as the ENGINE side's shortcutting
     # (operators/graph.py) — so state is O(n) per round and the
     # giant lev-1 component converges in O(log n) rounds instead of
     # the old reach-closure's O(n·|component|) tuples (which blew

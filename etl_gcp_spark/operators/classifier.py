@@ -105,7 +105,7 @@ def train_logreg(
     cost (observed: driver heap OOM at 25 steps). With the carry the
     plan grows linearly, and a ``localCheckpoint`` of the 1-row
     weight frame every ``checkpoint_every`` steps truncates even that
-    (same lineage discipline as the label-propagation loop in
+    (same lineage discipline as the contraction loop in
     operators/graph.py)."""
     spark = feats.sparkSession
     w = spark.sql("SELECT 0.0 b, 0.0 w1, 0.0 w2, 0.0 w3")

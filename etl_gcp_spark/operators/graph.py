@@ -7,27 +7,214 @@ CLUSTERS — a chain a~b~c is one duplicate group even when (a,c)
 itself is below threshold — and each cluster collapsed to one
 canonical representative. That closure is connected components.
 
-Spark-first design: iterative min-label propagation over the edge
-list. Each round is one shuffle-join (labels ⋈ edges) plus one
-map-side-combinable ``groupBy(min)``; labels only ever decrease, so
-the fixpoint test is a 1-row aggregate comparing ``sum(label)``
-between rounds (no row-wise diff join). Lineage is cut every round
-with ``localCheckpoint`` — without it the plan doubles per iteration
-and the job dies at ~20 rounds.
+Spark-first design: local contraction (Łącki et al., "Connected
+Components at Scale via Local Contractions", 2018). A round
+hash-partitions the symmetric edge list by source vertex and runs a
+numpy union-find over each partition's edges in ``mapInArrow``,
+emitting one (node, local min) star edge per non-root node; an eager
+``localCheckpoint`` cuts the lineage. When one partition saw every
+edge its union-find is exact and the round's output IS the answer.
+That is the common case — AQE coalesces a small graph's shuffle into
+one partition — so a closure costs one shuffle and one checkpoint
+however long its chains are. Otherwise every node hooks to its
+smallest local root, the parent forest is pointer-jumped to its tree
+roots (shortcutting; Stergiou et al., WSDM'18) and the star edges
+contract onto those roots for the next round. A round whose input is
+already a min-centred star forest reproduces it, so it ends the loop
+too.
 
-Round count is bounded by component diameter. Near-dup clusters are
-near-cliques (every member within threshold of a shared template),
-so 2-3 rounds close them; for adversarial long-chain graphs switch
-to alternating large-star/small-star (Kiveris et al., "Connected
-Components in MapReduce and Beyond", SoCC'14) which contracts in
-O(log² n) rounds — same per-round shuffle shape, so the plumbing
-here carries over.
+Round bound, independent of diameter and partitioning: call a node a
+survivor when no partition gave it a smaller root. A survivor is the
+min of every local component it sits in, so each neighbour of it gets
+it as a root and does not survive; and all of a non-survivor's
+neighbours share its own local component, whose min is the only
+survivor among them. Mapping each survivor to one neighbour is thus
+injective, so at most half of a round's vertices survive into the
+next: ≤ ⌈log₂ n⌉ + 1 rounds, plus O(log depth) pointer jumps each.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from etl_gcp_spark.caching import unpersist_pinned
+
+
+def _release(checkpointed: DataFrame) -> None:
+    """Drop a ``localCheckpoint``'s blocks. ``DataFrame.unpersist``
+    only covers ``cache()``; the checkpoint RDD sits in the plan's
+    LogicalRDD."""
+    checkpointed._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def _local_union_find(n_parts, n_unstable):
+    """``mapInArrow`` body over one partition's (u, v) edges: emits
+    (node, root = min of its local component) for every non-root node.
+    Adds 1 to ``n_parts`` when the partition got input, and to
+    ``n_unstable`` its keys u that break the min-centred star-forest
+    shape: u has a smaller neighbour and more than one neighbour."""
+
+    def run(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        cols = [
+            (b.column(0).to_numpy(), b.column(1).to_numpy())
+            for b in batches
+            if b.num_rows
+        ]
+        if not cols:
+            return
+        n_parts.add(1)
+        u = np.concatenate([c[0] for c in cols])
+        v = np.concatenate([c[1] for c in cols])
+        order = np.lexsort((v, u))
+        u, v = u[order], v[order]
+        fresh = np.r_[True, (u[1:] != u[:-1]) | (v[1:] != v[:-1])]
+        u, v = u[fresh], v[fresh]
+        # the shuffle is keyed on u, so each key's neighbour list is
+        # whole here and sorted: its first neighbour is its smallest
+        first = np.flatnonzero(np.r_[True, u[1:] != u[:-1]])
+        degree = np.diff(np.r_[first, len(u)])
+        n_unstable.add(
+            int(np.count_nonzero((v[first] < u[first]) & (degree > 1)))
+        )
+
+        nodes, idx = np.unique(np.concatenate([u, v]), return_inverse=True)
+        a, b = idx[: len(u)], idx[len(u) :]
+        parent = np.arange(len(nodes))
+        while True:
+            ra, rb = parent[a], parent[b]
+            split = ra != rb
+            if not split.any():
+                break
+            # hook each larger root under the smaller one: parents
+            # only point at smaller ids, so a tree's root is its min
+            np.minimum.at(
+                parent,
+                np.maximum(ra[split], rb[split]),
+                np.minimum(ra[split], rb[split]),
+            )
+            while True:
+                up = parent[parent]
+                if np.array_equal(up, parent):
+                    break
+                parent = up
+        child = np.flatnonzero(parent != np.arange(len(nodes)))
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(nodes[child]), pa.array(nodes[parent[child]])],
+            names=["node", "root"],
+        )
+
+    return run
+
+
+def _shortcut(parent: DataFrame) -> DataFrame:
+    """Pointer-jump a (node, root) parent forest until every node
+    points at its tree root; returns the checkpointed table."""
+    cur = parent.localCheckpoint(eager=True)
+    while True:
+        up = cur.select(
+            F.col("node").alias("__n"), F.col("root").alias("__r")
+        )
+        hop = cur.join(up, F.col("root") == F.col("__n"), "left")
+        if hop.filter(F.col("__r").isNotNull()).isEmpty():
+            return cur
+        nxt = hop.select(
+            "node", F.coalesce("__r", "root").alias("root")
+        ).localCheckpoint(eager=True)
+        _release(cur)
+        cur = nxt
+
+
+def component_map(
+    edges: DataFrame,
+    *,
+    src_col: str = "src",
+    dst_col: str = "dst",
+    max_iterations: int = 50,
+) -> DataFrame:
+    """(node, root) for every edge endpoint that is not the minimum of
+    its connected component; root = that minimum. The CC kernel (see
+    the module docstring). ``edges`` is undirected (each row connects
+    ``src_col`` ↔ ``dst_col``), ids integral; self-loops and duplicate
+    edges are harmless. The rounds run eagerly; the result is one
+    ``localCheckpoint``, the only block set a call leaves behind."""
+    sc = edges.sparkSession.sparkContext
+    cur = edges.select(
+        F.col(src_col).cast("long").alias("u"),
+        F.col(dst_col).cast("long").alias("v"),
+    )
+    hops: list[DataFrame] = []  # each contracted round's shortcut table
+    prev = None
+    for _ in range(max_iterations):
+        n_parts, n_unstable = sc.accumulator(0), sc.accumulator(0)
+        stars = (
+            cur.select(
+                F.inline(
+                    F.array(
+                        F.struct("u", "v"),
+                        F.struct(F.col("v").alias("u"), F.col("u").alias("v")),
+                    )
+                )
+            )
+            .filter(F.col("u") != F.col("v"))
+            .repartition("u")
+            .mapInArrow(
+                _local_union_find(n_parts, n_unstable), "node long, root long"
+            )
+            .localCheckpoint(eager=True)
+        )
+        if prev is not None:
+            _release(prev)
+        # a task retry can only over-count, which costs a round, never
+        # stops one early
+        if n_parts.value <= 1:
+            final = stars
+            break
+        if n_unstable.value == 0:
+            # a star forest: each leaf came out once per partition
+            # that saw its edge, always with the same root
+            final = stars.dropDuplicates(["node"])
+            break
+        parent = _shortcut(
+            stars.groupBy("node").agg(F.min("root").alias("root"))
+        )
+        hops.append(parent)
+        up = parent.select(
+            F.col("node").alias("__n"), F.col("root").alias("__r")
+        )
+        # every star-edge node has a parent; a root keeps its own id
+        cur = (
+            stars.join(up, F.col("node") == F.col("__n"))
+            .select(F.col("__r").alias("u"), F.col("root").alias("r"))
+            .join(up, F.col("r") == F.col("__n"), "left")
+            .select("u", F.coalesce("__r", "r").alias("v"))
+        )
+        prev = stars
+    else:
+        raise RuntimeError(
+            f"component_map: no fixpoint in {max_iterations} rounds"
+        )
+    if not hops:
+        return final
+    # compose the rounds: a round's keys are roots of every earlier
+    # round, so they never collide with the keys composed so far
+    labels = hops[0]
+    for step in hops[1:] + [final]:
+        m = step.select(
+            F.col("node").alias("__n"), F.col("root").alias("__r")
+        )
+        labels = (
+            labels.join(m, F.col("root") == F.col("__n"), "left")
+            .select("node", F.coalesce("__r", "root").alias("root"))
+            .unionByName(step)
+        )
+    labels = labels.localCheckpoint(eager=True)
+    for done in hops + [stars]:
+        _release(done)
+    return labels
 
 
 def connected_components(
@@ -41,62 +228,50 @@ def connected_components(
 ) -> DataFrame:
     """(id, component) for every vertex; component = min reachable id.
 
-    ``vertices`` supplies the universe (isolated vertices come out as
-    their own singleton component); ``edges`` is undirected input —
-    each row connects ``src_col`` ↔ ``dst_col`` regardless of order.
+    ``vertices`` supplies the universe, one row per vertex (isolated
+    vertices come out as their own singleton component; edge endpoints
+    outside it are dropped); ``edges`` is undirected input — each row
+    connects ``src_col`` ↔ ``dst_col`` regardless of order. Vertices
+    enter only at the final left join, so callers pass the full
+    record set: no edge-vertex pass, no singleton splice.
     """
-    # bootstrap checkpoints stay EAGER: lazy ones materialize inside
-    # round 1's job, where sym and labels are sibling branches of one
-    # plan — their shared upstream (the pair-generation chain) gets
-    # recomputed per branch in racing stages instead of once per
-    # materialization job (r10: tried lazy, entity_erasure_audit build
-    # regressed 13.5 → 41 s isolated; reverted)
-    sym = (
-        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-        .union(edges.select(F.col(dst_col).alias("u"), F.col(src_col).alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
+    comp = component_map(
+        edges, src_col=src_col, dst_col=dst_col, max_iterations=max_iterations
+    ).select(F.col("node").alias("__n"), F.col("root").alias("__r"))
+    id_type = vertices.schema[id_col].dataType
+    return (
+        vertices.select(id_col)
+        .join(comp, F.col(id_col) == F.col("__n"), "left")
+        .select(
+            F.col(id_col),
+            F.coalesce(F.col("__r").cast(id_type), F.col(id_col)).alias(
+                "component"
+            ),
+        )
     )
-    labels = vertices.select(
-        F.col(id_col).alias("node"), F.col(id_col).alias("lbl")
-    ).localCheckpoint(eager=True)
-    # sum(lbl) is a monotone potential: propagation only lowers labels,
-    # so equality between rounds IS convergence. DECIMAL(38,0) keeps the
-    # sum exact for any realistic id domain (no double truncation).
-    # The initial potential is NOT measured with its own aggregate job:
-    # round 1 can only leave the sum unchanged when no label moves at
-    # all, and the None sentinel forces at least one round either way —
-    # an edge-free input just pays one extra (trivial) round instead of
-    # every input paying one extra job (r10).
-    total = None
-    for _ in range(max_iterations):
-        msgs = (
-            sym.join(labels, sym["u"] == labels["node"])
-            .select(F.col("v").alias("node"), F.col("lbl"))
-        )
-        # lazy checkpoint: the convergence aggregate below is the
-        # action that materializes it, so each round runs ONE job
-        # (join+groupBy+checkpoint+agg) instead of two (the eager
-        # form's separate materialization job)
-        labels = (
-            labels.union(msgs)
-            .groupBy("node")
-            .agg(F.min("lbl").alias("lbl"))
-            .localCheckpoint(eager=False)
-        )
-        new_total = labels.agg(
-            F.sum(F.col("lbl").cast("decimal(38,0)"))
-        ).first()[0]
-        if new_total == total:
-            break
-        total = new_total
-    else:
-        raise RuntimeError(
-            f"connected_components: no fixpoint in {max_iterations} rounds"
-        )
-    return labels.select(
-        F.col("node").alias(id_col), F.col("lbl").alias("component")
+
+
+def cluster_labels(
+    items: DataFrame,
+    pairs: DataFrame,
+    id_col: str,
+    *,
+    prefix: str = "cluster",
+) -> DataFrame:
+    """(id, <prefix>_id, <prefix>_size) for every row of ``items``,
+    closing an (id1, id2) pair frame: the label is the min member id,
+    singletons keep themselves with size 1. The closure runs eagerly,
+    so the result no longer reads ``pairs``."""
+    comp = connected_components(
+        items, pairs, id_col=id_col, src_col="id1", dst_col="id2"
+    )
+    return comp.select(
+        id_col,
+        F.col("component").alias(f"{prefix}_id"),
+        F.count("*")
+        .over(Window.partitionBy("component"))
+        .cast("bigint")
+        .alias(f"{prefix}_size"),
     )
 
 
@@ -106,7 +281,6 @@ def dedup_clusters(
     threshold: float = 0.8,
     n: int = 3,
     pair_source: str = "lsh",
-    cc_engine: str = "propagation",
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
@@ -120,12 +294,6 @@ def dedup_clusters(
     the oracle baseline. Cluster output is identical wherever LSH
     recall is 1 (verified pairwise-identical at sf0.001/sf0.01, so
     the recursive-CTE DuckDB oracle applies to both at those scales).
-
-    ``cc_engine`` picks the closure algorithm: ``"propagation"``
-    (default, O(diameter) rounds — near-clique dedup graphs close in
-    2-3) or ``"star"`` (alternating large-star/small-star, O(log² n)
-    rounds — the long-chain-safe path). Both produce the identical
-    (min-reachable-id) labeling, so the same oracle attaches.
 
     Output: (doc_id, cluster_id, cluster_size). Singleton documents —
     no similar partner, or too short to shingle — keep themselves as
@@ -145,133 +313,11 @@ def dedup_clusters(
     ]
     pairs = pair_fn(
         documents, threshold=threshold, n=n, text_col=text_col, id_col=id_col
-    ).persist()
-    # iterate ONLY over vertices that appear in some edge — in a real
-    # corpus the overwhelming majority of documents have no near-dup,
-    # and dragging them through every propagation round multiplies
-    # each iteration's shuffle by corpus size for no information.
-    # Isolated docs re-enter at the end as singleton clusters via one
-    # anti-join (measured at sf0.1: 3.0 s → 2.1 s).
-    edge_verts = (
-        pairs.select(F.col("id1").alias(id_col))
-        .union(pairs.select(F.col("id2").alias(id_col)))
-        .dropDuplicates()
     )
-    cc_fn = {
-        "propagation": connected_components,
-        "star": connected_components_star,
-    }[cc_engine]
-    comp = cc_fn(
-        edge_verts,
-        pairs,
-        id_col=id_col,
-        src_col="id1",
-        dst_col="id2",
-    ).select(F.col(id_col), F.col("component").alias("cluster_id"))
-    sizes = F.count("*").over(Window.partitionBy("cluster_id"))
-    clustered = comp.select(
-        id_col, "cluster_id", sizes.cast("bigint").alias("cluster_size")
-    )
-    singles = documents.join(edge_verts, id_col, "left_anti").select(
-        F.col(id_col),
-        F.col(id_col).alias("cluster_id"),
-        F.lit(1).cast("bigint").alias("cluster_size"),
-    )
-    from etl_gcp_spark.caching import tag_pinned
-
-    # long-lived sessions: release the edge pin with
-    # etl_gcp_spark.caching.unpersist_pinned(result) after materializing
-    return tag_pinned(clustered.unionByName(singles), pairs)
-
-
-def connected_components_star(
-    vertices: DataFrame,
-    edges: DataFrame,
-    *,
-    id_col: str = "id",
-    src_col: str = "src",
-    dst_col: str = "dst",
-    max_iterations: int = 30,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce
-    and Beyond", SoCC'14) — O(log² n) rounds regardless of component
-    DIAMETER, where min-label propagation needs O(diameter) rounds.
-
-    Use this for adversarial graphs (long chains — e.g. near-dup
-    "telephone game" drift across a crawl); for near-clique dedup
-    graphs :func:`connected_components` converges in 2-3 cheaper
-    rounds. Same output contract: (id, component = min reachable id).
-
-    Per round each operator is one groupBy(min) plus one join — the
-    same shuffle shape as a propagation round; the win is round COUNT.
-    Convergence = the edge multiset is a fixpoint of both operators,
-    detected with an order-insensitive (count, hash-sum) signature —
-    collision odds ~2⁻⁶⁴ per round, acceptable for a loop guard that
-    is additionally capped at ``max_iterations``.
-    """
-
-    def _sig(e: DataFrame) -> tuple:
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-        ).first()
-        return (row["n"], row["h"])
-
-    def large_star(e: DataFrame) -> DataFrame:
-        sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        return (
-            sym.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .dropDuplicates()
-        )
-
-    def small_star(e: DataFrame) -> DataFrame:
-        # direct every edge from the larger endpoint: u ≥ v
-        directed = e.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        mins = directed.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        return (
-            directed.join(mins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(mins.select(F.col("u"), F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .dropDuplicates()
-        )
-
-    cur = (
-        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
-    )
-    sig = _sig(cur)
-    for _ in range(max_iterations):
-        cur = small_star(large_star(cur)).localCheckpoint(eager=True)
-        new_sig = _sig(cur)
-        if new_sig == sig:
-            break
-        sig = new_sig
-    else:
-        raise RuntimeError(
-            f"connected_components_star: no fixpoint in {max_iterations} rounds"
-        )
-    # at the fixpoint the edge set is a star forest: u → component min
-    membership = cur.select(
-        F.col("u").alias(id_col), F.col("v").alias("component")
-    )
-    singletons = vertices.select(F.col(id_col)).join(
-        membership.select(id_col), id_col, "left_anti"
-    ).select(F.col(id_col), F.col(id_col).alias("component"))
-    return membership.unionByName(singletons)
+    out = cluster_labels(documents, pairs, id_col)
+    # the closure already read the pairs: drop the generator's index
+    unpersist_pinned(pairs)
+    return out
 
 
 def embedding_dedup_clusters(
@@ -307,29 +353,10 @@ def embedding_dedup_clusters(
         n_blocks=n_blocks,
         id_col=id_col,
         vec_col=vec_col,
-    ).persist()
-    edge_verts = (
-        pairs.select(F.col("id1").alias(id_col))
-        .union(pairs.select(F.col("id2").alias(id_col)))
-        .dropDuplicates()
     )
-    comp = connected_components(
-        edge_verts, pairs, id_col=id_col, src_col="id1", dst_col="id2"
-    ).select(F.col(id_col), F.col("component").alias("cluster_id"))
-    sizes = F.count("*").over(Window.partitionBy("cluster_id"))
-    clustered = comp.select(
-        id_col, "cluster_id", sizes.cast("bigint").alias("cluster_size")
-    )
-    singles = embeddings.join(edge_verts, id_col, "left_anti").select(
-        F.col(id_col),
-        F.col(id_col).alias("cluster_id"),
-        F.lit(1).cast("bigint").alias("cluster_size"),
-    )
-    from etl_gcp_spark.caching import tag_pinned
-
-    # long-lived sessions: release the edge pin with
-    # etl_gcp_spark.caching.unpersist_pinned(result) after materializing
-    return tag_pinned(clustered.unionByName(singles), pairs)
+    out = cluster_labels(embeddings, pairs, id_col)
+    unpersist_pinned(pairs)
+    return out
 
 
 def pagerank(
@@ -621,7 +648,7 @@ def ensemble_near_dup_clusters(
         n_blocks=n_blocks,
         id_col=vec_id_col,
     ).select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
-    edges = lex.union(sem).dropDuplicates()
+    edges = lex.union(sem)
     comp = connected_components(
         documents.select(F.col(doc_id_col).alias("id")),
         edges,

@@ -275,62 +275,23 @@ def entity_clusters(
     component {a,b,c}, labeled by its minimum member id.
 
     Composes two verified pieces: the mask-key blocked
-    :func:`fuzzy_pairs` (linear candidate generation) and
-    :func:`~etl_gcp_spark.operators.graph.connected_components`
-    (min-label propagation over EDGE VERTICES only — unmatched
-    records rejoin as singletons through one anti-join, never
-    dragging the full table through the iteration; same discipline
-    as dedup_clusters).
+    :func:`fuzzy_pairs` (linear candidate generation) and the
+    local-contraction closure
+    :func:`~etl_gcp_spark.operators.graph.connected_components`,
+    which takes the full record set as its vertex universe (unmatched
+    records come out as singletons, no splice).
 
     Output: (id, entity_id, entity_size) for every input row.
     """
-    pairs = fuzzy_pairs(
-        df, id_col, text_col, max_distance=max_distance
-    ).persist()
-    from etl_gcp_spark.caching import tag_pinned
+    from etl_gcp_spark.caching import unpersist_pinned
+    from etl_gcp_spark.operators.graph import cluster_labels
 
-    return tag_pinned(
-        entity_clusters_from_pairs(df, pairs, id_col), pairs
-    )
-
-
-def entity_clusters_from_pairs(
-    df: DataFrame, pairs: DataFrame, id_col: str
-) -> DataFrame:
-    """The closure+splice half of :func:`entity_clusters`, taking an
-    already-materialized (id1, id2) match-pair frame: min-label
-    propagation over EDGE VERTICES only, sizes by window, unmatched
-    records rejoin as singletons through one anti-join. Shared with
-    the deletion-maintenance audit, whose maintenance leg FILTERS a
-    persisted match store instead of re-blocking (deletion cannot
-    create edges, so the stored pair set is complete for any
-    survivor subset). Caller owns the pair frame's lifecycle."""
-    from pyspark.sql import Window
-
-    from etl_gcp_spark.operators.graph import connected_components
-
-    verts = (
-        pairs.select(F.col("id1").alias(id_col))
-        .union(pairs.select(F.col("id2").alias(id_col)))
-        .dropDuplicates()
-    )
-    comp = connected_components(
-        verts, pairs, id_col=id_col, src_col="id1", dst_col="id2"
-    ).select(F.col(id_col), F.col("component").alias("entity_id"))
-    matched = comp.select(
-        id_col,
-        "entity_id",
-        F.count("*")
-        .over(Window.partitionBy("entity_id"))
-        .cast("bigint")
-        .alias("entity_size"),
-    )
-    singles = df.join(verts, id_col, "left_anti").select(
-        F.col(id_col),
-        F.col(id_col).alias("entity_id"),
-        F.lit(1).cast("bigint").alias("entity_size"),
-    )
-    return matched.unionByName(singles)
+    pairs = fuzzy_pairs(df, id_col, text_col, max_distance=max_distance)
+    out = cluster_labels(df, pairs, id_col, prefix="entity")
+    # the closure ran eagerly and already read the pairs: drop the
+    # blocking index they pinned
+    unpersist_pinned(pairs)
+    return out
 
 
 def probe_new_edges(
@@ -374,29 +335,25 @@ def probe_new_edges(
 def contracted_merge(edges: DataFrame, lblmap: DataFrame) -> DataFrame:
     """Close new edges on the CONTRACTED graph: endpoints collapse to
     their current labels (``lblmap``: (__n, __l); endpoints absent
-    from it keep their own id), then min-label propagation over the
-    contracted vertex set. Returns (node = old label, component =
-    merged min). Because every label is the min member id of its
-    component, the merged component's min over {labels, new ids} IS
-    the global min member id — the invariant both the audit and the
-    streaming ingest rely on. SHARED for the same reason as
-    :func:`probe_new_edges`."""
-    from etl_gcp_spark.operators.graph import connected_components
+    from it keep their own id), then the local-contraction kernel
+    closes the contracted edges. Returns (node = old label, component
+    = merged min) for every contracted node whose label CHANGES; any
+    other label stays as it is. Because every label is the min member
+    id of its component, the merged component's min over {labels,
+    new ids} IS the global min member id — the invariant both the
+    audit and the streaming ingest rely on. SHARED for the same
+    reason as :func:`probe_new_edges`."""
+    from etl_gcp_spark.operators.graph import component_map
 
     cedges = (
         edges.join(lblmap, edges["id1"] == lblmap["__n"], "left")
         .select(F.coalesce("__l", "id1").alias("u"), F.col("id2"))
         .join(lblmap, F.col("id2") == lblmap["__n"], "left")
         .select("u", F.coalesce("__l", "id2").alias("v"))
-        .filter(F.col("u") != F.col("v"))
     )
-    cverts = (
-        cedges.select(F.col("u").alias("node"))
-        .union(cedges.select("v"))
-        .dropDuplicates()
-    )
-    return connected_components(
-        cverts, cedges, id_col="node", src_col="u", dst_col="v"
+    label_type = cedges.schema["u"].dataType
+    return component_map(cedges, src_col="u", dst_col="v").select(
+        "node", F.col("root").cast(label_type).alias("component")
     )
 
 
@@ -445,7 +402,6 @@ def entity_clusters_increment_audit(
 
     from etl_gcp_spark import metering
     from etl_gcp_spark.caching import tag_pinned
-    from etl_gcp_spark.operators.graph import connected_components
 
     if max_distance != 1:
         raise NotImplementedError(
@@ -477,7 +433,7 @@ def entity_clusters_increment_audit(
     # the base clustering is the pre-existing production artifact
     # (built BEFORE any delta arrives) — meter it as build, matching
     # the erasure twin's discipline. Construction inside the phase:
-    # the closure's min-label rounds run eagerly via localCheckpoint
+    # the closure's contraction rounds run eagerly via localCheckpoint
     # (operators/graph.py), so a count-only phase meters ~nothing.
     with metering.phase("build"):
         base_ec = entity_clusters(
@@ -557,14 +513,7 @@ def entity_clusters_increment_audit(
             )
         )
     )
-    # hoist the legs' OWN pins (entity_clusters persists its pair
-    # frame and tags it on ITS result) — unpersist_pinned does not
-    # recurse, so without this the inner pair caches would outlive
-    # the audit in a long-lived session
-    inner = tuple(getattr(base_ec, "_etl_pinned_frames", ())) + tuple(
-        getattr(full, "_etl_pinned_frames", ())
-    )
-    return tag_pinned(out, new_edges, base_ec, incr, full, *inner)
+    return tag_pinned(out, new_edges, base_ec, incr, full)
 
 
 def entity_clusters_erasure_audit(
@@ -617,21 +566,22 @@ def entity_clusters_erasure_audit(
     """
     from etl_gcp_spark import metering
     from etl_gcp_spark.caching import tag_pinned
+    from etl_gcp_spark.operators.graph import cluster_labels
 
     # the match store + label store: blocked and closed ONCE (in
     # production both are persisted artifacts that exist BEFORE any
     # erasure arrives, so their materialization meters as build —
     # bench reports the maintenance+verification cost separately).
     # The phase wraps CONSTRUCTION, not just the count: the closure's
-    # min-label rounds run EAGERLY via localCheckpoint at build-plan
+    # contraction rounds run EAGERLY via localCheckpoint at build-plan
     # time (operators/graph.py), so a count-only phase would meter
     # almost nothing (measured: 19 s of closure billed to serve).
     with metering.phase("build"):
         pairs_all = fuzzy_pairs(
             df, id_col, text_col, max_distance=max_distance
         ).persist()
-        base_ec = entity_clusters_from_pairs(
-            df, pairs_all, id_col
+        base_ec = cluster_labels(
+            df, pairs_all, id_col, prefix="entity"
         ).persist()
         pairs_all.count()
         base_ec.count()
@@ -661,8 +611,8 @@ def entity_clusters_erasure_audit(
         touched_ids.withColumnRenamed(id_col, "id1"), "id1"
     )
     touched_survivors = df.join(touched_ids, id_col)
-    re_ec = entity_clusters_from_pairs(
-        touched_survivors, touched_pairs, id_col
+    re_ec = cluster_labels(
+        touched_survivors, touched_pairs, id_col, prefix="entity"
     ).persist()
 
     incr = (
@@ -685,8 +635,8 @@ def entity_clusters_erasure_audit(
     # INSIDE the phase — the closure rounds are eager (see the build
     # phase note above).
     with metering.phase("verify"):
-        full = entity_clusters_from_pairs(
-            remaining, surv_pairs, id_col
+        full = cluster_labels(
+            remaining, surv_pairs, id_col, prefix="entity"
         ).persist()
         full.count()
 

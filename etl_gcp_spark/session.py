@@ -13,7 +13,9 @@ so the static ``shuffle.partitions`` value is only a ceiling.
 from __future__ import annotations
 
 import os
+import warnings
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -55,20 +57,36 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
     # SPARK_GRAFT_SPARK_CONF="k=v;k=v" — session-construction overrides
     # for config A/B experiments (shuffle codec, committer algorithm,
     # join-strategy preference). Unset (the default, and what the
     # driver's bench runs with) this is a no-op, so benchmark
     # methodology is unchanged; cluster deployments set their
-    # scale-appropriate values here instead of editing code.
-    env_conf = os.environ.get("SPARK_GRAFT_SPARK_CONF", "")
-    for pair in env_conf.split(";"):
-        if "=" in pair:
-            k, _, v = pair.partition("=")
-            builder = builder.config(k.strip(), v.strip())
+    # scale-appropriate values here instead of editing code. ';'
+    # separates pairs, so a value cannot contain one; a non-empty pair
+    # without '=' is an error, not a silent skip.
+    overrides = dict(extra_conf or {})
+    for pair in os.environ.get("SPARK_GRAFT_SPARK_CONF", "").split(";"):
+        if not pair.strip():
+            continue
+        k, sep, v = pair.partition("=")
+        if not sep or not k.strip():
+            raise ValueError(
+                f"SPARK_GRAFT_SPARK_CONF: expected key=value, got {pair!r}"
+            )
+        overrides[k.strip()] = v.strip()
+    for k, v in overrides.items():
+        builder = builder.config(k, v)
+    if overrides and SparkContext._active_spark_context is not None:
+        # getOrCreate() reuses the running context: static and core
+        # settings (master, memory, event log) keep their old values
+        warnings.warn(
+            "get_spark: a SparkContext is already running, so config "
+            f"overrides {sorted(overrides)} apply only where they are "
+            "runtime SQL settings",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

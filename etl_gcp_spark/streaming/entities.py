@@ -269,7 +269,6 @@ def run_streaming_entity_ingest(
     checkpoint; ``fail_after_batches`` injects a post-write
     pre-commit crash (recovery tests).
     """
-    from etl_gcp_spark.caching import unpersist_pinned
     from etl_gcp_spark.operators.linkage import (
         contracted_merge,
         entity_clusters,
@@ -291,7 +290,6 @@ def run_streaming_entity_ingest(
     base_ec.select(
         F.col("c_custkey").alias("id"), F.col("entity_id").alias("lbl")
     ).write.mode("overwrite").parquet(os.path.join(root, "labels_base"))
-    unpersist_pinned(base_ec)
     mask_key_index(base, "c_custkey", "c_name").write.mode(
         "overwrite"
     ).parquet(os.path.join(root, "maskkeys", "base"))
@@ -435,10 +433,8 @@ def run_streaming_entity_erasure(
     build cannot clear committed deletions.
     """
     from etl_gcp_spark.caching import unpersist_pinned
-    from etl_gcp_spark.operators.linkage import (
-        entity_clusters_from_pairs,
-        fuzzy_pairs,
-    )
+    from etl_gcp_spark.operators.graph import cluster_labels
+    from etl_gcp_spark.operators.linkage import fuzzy_pairs
 
     root = root or os.path.join(
         tempfile.gettempdir(),
@@ -454,8 +450,8 @@ def run_streaming_entity_erasure(
     pairs = fuzzy_pairs(records, "c_custkey", "c_name")
     pairs.select("id1", "id2").write.mode("overwrite").parquet(pairs_path)
     unpersist_pinned(pairs)
-    base_ec = entity_clusters_from_pairs(
-        records, spark.read.parquet(pairs_path), "c_custkey"
+    base_ec = cluster_labels(
+        records, spark.read.parquet(pairs_path), "c_custkey", prefix="entity"
     )
     base_ec.select(
         F.col("c_custkey").alias("id"), F.col("entity_id").alias("lbl")
@@ -513,8 +509,8 @@ def run_streaming_entity_erasure(
         touched_records = records.join(
             touched_ids.withColumnRenamed("id", "c_custkey"), "c_custkey"
         )
-        re_ec = entity_clusters_from_pairs(
-            touched_records, touched_pairs, "c_custkey"
+        re_ec = cluster_labels(
+            touched_records, touched_pairs, "c_custkey", prefix="entity"
         )
         re_ec.select(
             F.col("c_custkey").alias("id"), F.col("entity_id").alias("lbl")

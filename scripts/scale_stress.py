@@ -8,7 +8,7 @@ high-cosine neighbors — and times the SCALE-PATH operators on both:
 
     minhash_lsh_pairs          (banding + exact verify)
     blocked_exact_near_dup_pairs (distributed blocked GEMM)
-    dedup_clusters             (LSH edges + label propagation)
+    dedup_clusters             (LSH edges + local-contraction CC)
     curation_funnel            (filter -> exact dedup -> LSH near-dup)
 
 For each operator it reports wall seconds at both sizes and the

@@ -70,6 +70,33 @@ def test_registry_releases_pins(spark, sf_dir):
     )
 
 
+def test_release_pins_spares_other_threads(spark, sf_dir):
+    """The ledger is per thread: release_pins() on one thread leaves
+    an in-flight entry's pins on another thread alone, and picks up a
+    thread's pins once that thread has exited."""
+    import threading
+
+    q = entrymod.queries()
+    ready, done, held = threading.Event(), threading.Event(), {}
+
+    def worker():
+        held["pins"] = q["curation_funnel"](spark, sf_dir)._etl_pinned_frames
+        ready.set()
+        done.wait()
+
+    t = threading.Thread(target=worker)
+    t.start()
+    ready.wait()
+    try:
+        entrymod.release_pins()
+        assert held["pins"] and all(f.is_cached for f in held["pins"])
+    finally:
+        done.set()
+        t.join()
+    entrymod.release_pins()
+    assert not any(f.is_cached for f in held["pins"])
+
+
 def test_registry_outputs_scalar_only(spark, sf_dir):
     """Driver-canonicalization guard over the WHOLE registry, streaming
     entries included: the round driver canonicalizes every result with
@@ -88,7 +115,9 @@ def test_registry_outputs_scalar_only(spark, sf_dir):
     uuid4-suffixed or a per-entry-named tempdir (no shared paths);
     temp views are only registered with identical definitions
     (register_views over the same sf_dir) or entry-private names; the
-    pin ledger is lock-guarded in __spark_entry__; per-entry
+    pin ledger is keyed per thread in __spark_entry__; the one shared
+    fixed path, the simhash oracle side table two entries write, is
+    written under a per-name lock; per-entry
     shuffle-partition conf twiddles alter only plan shape, never
     schemas or values."""
     from concurrent.futures import ThreadPoolExecutor

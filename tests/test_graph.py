@@ -7,6 +7,9 @@ dedup_clusters operator on the crafted corpus from test_text_dedup.
 
 from __future__ import annotations
 
+import random
+
+import pytest
 from pyspark.sql import Row
 
 from etl_gcp_spark.operators.graph import connected_components, dedup_clusters
@@ -101,44 +104,125 @@ def test_dedup_clusters_lsh_matches_exact_source(spark, sf_dir):
     assert lsh == exact
 
 
-def test_star_contraction_closes_long_chain(spark):
-    # a 120-node path graph: label propagation needs O(diameter) = 120
-    # rounds (far past its cap); star contraction closes in O(log² n)
-    from etl_gcp_spark.operators.graph import connected_components_star
-
-    verts = spark.createDataFrame([Row(id=i) for i in range(120)])
-    edges = spark.createDataFrame(
-        [Row(src=i, dst=i + 1) for i in range(119)]
-    )
-    out = connected_components_star(verts, edges)
-    rows = {r.id: r.component for r in out.collect()}
-    assert len(rows) == 120
-    assert set(rows.values()) == {0}
+@pytest.fixture(scope="module")
+def spark_multi(spark):
+    """A child session (own SQLConf, shared SparkContext) whose CC
+    shuffle stays at 8 partitions, so no partition sees every edge
+    and the kernel takes its contraction rounds and stop rules."""
+    s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    s.conf.set("spark.sql.shuffle.partitions", "8")
+    return s
 
 
-def test_star_contraction_matches_propagation(spark):
-    import random
+def _union_find(n, pairs):
+    parent = list(range(n))
 
-    from etl_gcp_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
 
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {i: find(i) for i in range(n)}
+
+
+def _shuffled_path(n, seed):
+    ids = list(range(n))
+    random.Random(seed).shuffle(ids)
+    return [(ids[i], ids[i + 1]) for i in range(n - 1)]
+
+
+def _graphs():
     rng = random.Random(7)
-    n = 60
-    edges = [
-        Row(src=rng.randrange(n), dst=rng.randrange(n)) for _ in range(45)
-    ]
+    for n, m in ((60, 45), (200, 190), (300, 600)):
+        yield n, [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
+    yield 120, _shuffled_path(120, 3)
+
+
+def _cc(spark, n, pairs):
     verts = spark.createDataFrame([Row(id=i) for i in range(n)])
-    e = spark.createDataFrame(edges)
-    prop = {
-        r.id: r.component for r in connected_components(verts, e).collect()
-    }
-    star = {
-        r.id: r.component
-        for r in connected_components_star(verts, e).collect()
-    }
-    assert prop == star
+    edges = spark.createDataFrame(
+        [Row(src=a, dst=b) for a, b in pairs], "src long, dst long"
+    )
+    out = connected_components(verts, edges)
+    return {r.id: r.component for r in out.collect()}
+
+
+def _matches_union_find(s):
+    # seeded random graphs (isolated vertices, multi-edges, self-loops)
+    # and a shuffled-id path, against a sequential union-find
+    for n, pairs in _graphs():
+        assert _cc(s, n, pairs) == _union_find(n, pairs), (n, len(pairs))
+
+
+def test_kernel_matches_python_union_find(spark):
+    _matches_union_find(spark)
+
+
+def test_kernel_matches_python_union_find_multi_partition(spark_multi):
+    _matches_union_find(spark_multi)
+
+
+def test_long_chain_closes_in_log_rounds(spark_multi, monkeypatch):
+    # a 120-node path: label propagation needed O(diameter) rounds;
+    # with 8 partitions the contraction rounds run and still close it
+    from etl_gcp_spark.operators import graph
+
+    calls = []
+    real = graph._shortcut
+    monkeypatch.setattr(
+        graph, "_shortcut", lambda p: calls.append(1) or real(p)
+    )
+    rows = _cc(spark_multi, 120, [(i, i + 1) for i in range(119)])
+    assert len(rows) == 120 and set(rows.values()) == {0}
+    assert calls, "the multi-partition path never contracted"
+
+
+def test_star_forest_input_stops_without_contraction(spark_multi, monkeypatch):
+    # a min-centred star forest is stable: the first round reproduces
+    # it, so the kernel stops there even though 8 partitions got input
+    from etl_gcp_spark.operators import graph
+
+    monkeypatch.setattr(
+        graph, "_shortcut", lambda p: pytest.fail("contracted a stable input")
+    )
+    pairs = [(c + k, c) for c in (0, 10, 20, 30) for k in range(1, 10)]
+    got = _cc(spark_multi, 40, pairs)
+    assert got == {i: i - i % 10 for i in range(40)}
+
+
+def _leaves_only_result_checkpoint(s):
+    from etl_gcp_spark.operators.graph import _release, component_map
+
+    jsc = s.sparkContext._jsc
+
+    def persistent():
+        keys = jsc.getPersistentRDDs().keySet().toArray()
+        return {int(str(k)) for k in keys}
+
+    edges = s.createDataFrame(
+        [Row(src=a, dst=b) for a, b in _shuffled_path(200, 11)],
+        "src long, dst long",
+    )
+    before = persistent()
+    out = component_map(edges)
+    assert len(persistent() - before) == 1
+    assert out.count() == 199
+    _release(out)
+    assert persistent() - before == set()
+
+
+def test_cc_leaves_only_its_result_checkpoint(spark):
+    _leaves_only_result_checkpoint(spark)
+
+
+def test_cc_leaves_only_its_result_checkpoint_multi_partition(spark_multi):
+    _leaves_only_result_checkpoint(spark_multi)
 
 
 def test_embedding_dedup_clusters_transitive(spark):
@@ -164,19 +248,17 @@ def test_embedding_dedup_clusters_transitive(spark):
     assert out[4].cluster_id == 4 and out[4].cluster_size == 1
 
 
-def test_dedup_clusters_star_engine_matches_propagation(spark, sf_dir):
-    from etl_gcp_spark.operators.graph import dedup_clusters
-    from etl_gcp_spark.sources.readers import load_table
+def test_dedup_clusters_star_entry_matches_dedup_clusters(spark, sf_dir):
+    # the retired star engine's registry name stays in the driver
+    # contract and now runs the one kernel: same rows as dedup_clusters
+    import __spark_entry__ as entrymod
 
-    docs = load_table(spark, sf_dir, "documents")
-    prop = sorted(map(tuple, dedup_clusters(docs, threshold=0.8).collect()))
+    q = entrymod.queries()
+    plain = sorted(map(tuple, q["dedup_clusters"](spark, sf_dir).collect()))
     star = sorted(
-        map(
-            tuple,
-            dedup_clusters(docs, threshold=0.8, cc_engine="star").collect(),
-        )
+        map(tuple, q["dedup_clusters_star"](spark, sf_dir).collect())
     )
-    assert prop == star and prop
+    assert plain == star and plain
 
 
 def test_triangle_participation_counts(spark):
