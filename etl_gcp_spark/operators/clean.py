@@ -109,19 +109,6 @@ def drop_meta(df: DataFrame) -> DataFrame:
     return df.drop(*METADATA_COLUMNS)
 
 
-def trim_strings(df: DataFrame) -> DataFrame:
-    """P6: TRIM every string column (reference's in-DB PL/pgSQL loop,
-    data_loader.py:312-320) as a single codegen'd projection."""
-    return df.select(
-        *[
-            F.trim(F.col(f.name)).alias(f.name)
-            if isinstance(f.dataType, T.StringType)
-            else F.col(f.name)
-            for f in df.schema.fields
-        ]
-    )
-
-
 def winsorize(
     df: DataFrame,
     col: str,

@@ -176,27 +176,6 @@ def hilbert_layout_stats(
     )
 
 
-def write_hilbert(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    *,
-    bits: int = 8,
-    n_files: int = 64,
-) -> None:
-    """Write ``df`` parquet physically clustered on the Hilbert curve
-    (same range-partition + within-file sort discipline as
-    ``write_zordered``)."""
-    keyed = hilbert_key(df, cols, bits=bits)
-    (
-        keyed.repartitionByRange(n_files, "hkey")
-        .sortWithinPartitions("hkey")
-        .drop("hkey")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
 def zorder_layout_stats(
     df: DataFrame,
     cols: list[str],

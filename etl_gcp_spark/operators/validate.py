@@ -67,17 +67,6 @@ def violation_summary(df: DataFrame, rules: list[Rule]) -> DataFrame:
     )
 
 
-def null_counts(df: DataFrame, cols: list[str]) -> DataFrame:
-    """A7: one-row frame of null counts for each critical column
-    (reference data_loader.py:361-366) — single pass."""
-    return df.agg(
-        *[
-            F.sum(F.col(c).isNull().cast("long")).alias(f"{c}_nulls")
-            for c in cols
-        ]
-    )
-
-
 def range_rule(col: str, lo: float, hi: float) -> Rule:
     """P12 analog: value outside [lo, hi] is a violation
     (reference data_loader.py:356-359)."""

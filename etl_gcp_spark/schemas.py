@@ -4,8 +4,7 @@ The reference infers schemas from pandas dtypes and maintains explicit
 dtype→DDL maps (reference ``data_extractor.py:340-353``,
 ``data_loader.py:121-138``), compares live table schemas against the
 inferred one with name normalization (``data_extractor.py:296-312``,
-``data_loader.py:140-177``), and asserts required columns
-(``data_validator.py:142-160``). Here those become pure functions over
+``data_loader.py:140-177``). Here those become pure functions over
 ``StructType`` — deterministic and unit-testable, no catalog round-trip
 needed.
 """
@@ -15,7 +14,6 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import types as T
-from etl_gcp_spark.smalldf import small_df
 
 # Reference dtype map (data_extractor.py:340-346 + data_loader.py:121-130),
 # re-expressed as pandas-dtype-string → Spark type. StringType is the
@@ -57,20 +55,6 @@ def normalize_name(name: str) -> str:
     return name.lower().replace(" ", "_").replace("-", "_").replace(".", "_")
 
 
-def schema_from_pandas(df) -> T.StructType:
-    """Infer a Spark StructType from a pandas DataFrame's dtypes.
-
-    Equivalent of the reference's ``SchemaValidator.infer_schema``
-    (data_loader.py:132-138) with normalized column names.
-    """
-    return T.StructType(
-        [
-            T.StructField(normalize_name(str(c)), spark_type_for_pandas(dt), True)
-            for c, dt in zip(df.columns, df.dtypes)
-        ]
-    )
-
-
 @dataclass
 class SchemaDiff:
     """Result of comparing an existing schema against an incoming one."""
@@ -98,10 +82,8 @@ def schema_diff(
     Mirrors the reference's compatibility check
     (data_loader.py:140-177): names compared after
     ``normalize_name``, metadata columns ignored, per-column type
-    mismatches reported. Drives the overwrite-vs-append decision in
-    :mod:`etl_gcp_spark.sinks.writers` the way schema match drove
-    TRUNCATE-vs-DROP/CREATE in the reference
-    (data_extractor.py:314-377).
+    mismatches reported. In the reference, schema match drove the
+    TRUNCATE-vs-DROP/CREATE choice (data_extractor.py:314-377).
     """
     ex = {
         normalize_name(f.name): f.dataType
@@ -123,47 +105,3 @@ def schema_diff(
                 (name, ex[name].simpleString(), inc[name].simpleString())
             )
     return diff
-
-
-def require_columns(schema_or_df, required: list[str]) -> list[str]:
-    """Return required columns missing from a schema (empty == pass).
-
-    Equivalent of the reference's required-columns validation
-    (data_validator.py:142-160); comparison is normalization-aware.
-    """
-    cols = (
-        schema_or_df.names
-        if isinstance(schema_or_df, T.StructType)
-        else schema_or_df.columns
-    )
-    have = {normalize_name(c) for c in cols}
-    return [c for c in required if normalize_name(c) not in have]
-
-
-def table_exists(spark, name: str) -> bool:
-    """S11 table-existence probe — ``spark.catalog.tableExists`` on
-    temp views, global temp views, and catalog tables alike.
-
-    The reference probes ``information_schema.tables``
-    (data_extractor.py:266-277); the catalog call is the engine-side
-    equivalent and costs one metastore lookup, no scan.
-    """
-    return spark.catalog.tableExists(name)
-
-
-def list_columns(spark, name: str):
-    """S12 column-catalog probe as a DataFrame of
-    (column_name, data_type, nullable).
-
-    The reference reads ``information_schema.columns``
-    (data_extractor.py:279-294). ``spark.catalog.listColumns`` is the
-    metastore analog; the result is re-exposed as a DataFrame so it
-    composes with the rest of the engine (joinable against
-    expectations, writable through any sink).
-    """
-    cols = spark.catalog.listColumns(name)
-    return small_df(
-        spark,
-        [(c.name, c.dataType, bool(c.nullable)) for c in cols],
-        "column_name string, data_type string, nullable boolean",
-    )

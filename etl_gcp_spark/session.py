@@ -90,14 +90,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def ensure_utc(spark: SparkSession) -> SparkSession:
-    """Force UTC timestamp semantics on an externally-created session.
-
-    The driver supplies its own SparkSession to ``__spark_entry__``
-    callables; timestamp-window alignment and oracle comparison both
-    assume UTC wall-clock semantics, so make it explicit.
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark

@@ -24,7 +24,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from etl_gcp_spark.schemas import schema_diff
 
 
 def write_table(
@@ -58,34 +57,6 @@ def write_table(
     if merge_schema:
         writer = writer.option("mergeSchema", "true")
     writer.save(path)
-
-
-def evolve_and_write(
-    df: DataFrame,
-    path: str,
-    *,
-    fmt: str = "parquet",
-) -> str:
-    """Schema-evolution-aware write: append when compatible, else overwrite.
-
-    Reproduces the reference's evolution policy (SURVEY.md §1.3):
-    incoming schema compared (normalization-aware) against the
-    existing table; match → fast path (append to the same layout,
-    TRUNCATE-analog handled by caller choosing overwrite), mismatch →
-    full rewrite with the new schema (DROP+CREATE analog). Returns the
-    mode used, for logging/testing.
-    """
-    spark = df.sparkSession
-    try:
-        existing = spark.read.format(fmt).load(path).schema
-    except Exception:
-        write_table(df, path, mode="overwrite", fmt=fmt)
-        return "create"
-    if schema_diff(existing, df.schema).compatible:
-        write_table(df, path, mode="append", fmt=fmt)
-        return "append"
-    write_table(df, path, mode="overwrite", fmt=fmt)
-    return "overwrite"
 
 
 def write_chunked_csv(

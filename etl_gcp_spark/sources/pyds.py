@@ -227,37 +227,27 @@ def stream_chunk_ingest(spark, waves, root: str):
 
     Returns the union of everything ingested.
     """
-    import os as _os
+    from etl_gcp_spark.streaming.staging import run_microbatches
 
-    in_dir = _os.path.join(root, "in")
-    out_dir = _os.path.join(root, "out")
-    ckpt = _os.path.join(root, "ckpt")
+    in_dir = os.path.join(root, "in")
+    out_dir = os.path.join(root, "out")
     spark.dataSource.register(ChunkedCsvDataSource)
+
+    def sink(df, bid):
+        df.write.mode("overwrite").parquet(os.path.join(out_dir, f"b{bid}"))
+
     start_idx = 0
     schema = None
     for wave in waves:
         schema = schema or wave.schema
-        files = write_reference_chunks(
-            wave, in_dir, start_index=start_idx
+        start_idx += len(
+            write_reference_chunks(wave, in_dir, start_index=start_idx)
         )
-        start_idx += len(files)
         sdf = (
             spark.readStream.format("chunked_csv")
             .schema(schema)
             .option("path", in_dir)
             .load()
         )
-
-        def sink(df, bid):
-            df.write.mode("overwrite").parquet(
-                _os.path.join(out_dir, f"b{bid}")
-            )
-
-        q = (
-            sdf.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(_os.path.join(out_dir, "b*"))
+        run_microbatches(sdf, root, sink)
+    return spark.read.parquet(os.path.join(out_dir, "b*"))

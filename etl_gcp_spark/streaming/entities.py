@@ -36,14 +36,17 @@ replayed patch and lose relabels).
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_gcp_spark.metering import timed as _timed_phase
-from etl_gcp_spark.streaming.staging import staged_ready
+from etl_gcp_spark.streaming.staging import (
+    run_microbatches,
+    scratch_root,
+    staged_ready,
+    staged_stream,
+)
 
 _metered_build = _timed_phase("build")
 
@@ -276,10 +279,7 @@ def run_streaming_entity_ingest(
         probe_new_edges,
     )
 
-    root = root or os.path.join(
-        tempfile.gettempdir(),
-        f"etl_gcp_spark_entstream_{uuid.uuid4().hex}",
-    )
+    root = scratch_root(root, "entstream")
     records = spark.read.parquet(customer_path).select(
         "c_custkey", "c_name"
     )
@@ -301,7 +301,6 @@ def run_streaming_entity_ingest(
         delta.repartition(n_batches).write.mode("overwrite").parquet(staged)
 
     appends = os.path.join(root, "maskkeys", "appends")
-    done_in_run = {"n": 0}
 
     def ingest(batch_df, batch_id):
         keys = mask_key_index(batch_df, "c_custkey", "c_name")
@@ -362,26 +361,11 @@ def run_streaming_entity_ingest(
         patch.write.mode("overwrite").parquet(
             os.path.join(root, "labels", f"batch={batch_id}")
         )
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            # crash AFTER the sink writes, BEFORE the checkpoint
-            # commit — the engine must replay this batch_id and the
-            # overwrites above must absorb the replay
-            raise RuntimeError("injected crash (recovery test)")
 
-    stream = (
-        spark.readStream.schema(RECORDS_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
+    run_microbatches(
+        staged_stream(spark, root, RECORDS_SCHEMA), root, ingest,
+        fail_after_batches,
     )
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
     if compact:
         entity_labels_compact(spark, root)
@@ -436,10 +420,7 @@ def run_streaming_entity_erasure(
     from etl_gcp_spark.operators.graph import cluster_labels
     from etl_gcp_spark.operators.linkage import fuzzy_pairs
 
-    root = root or os.path.join(
-        tempfile.gettempdir(),
-        f"etl_gcp_spark_enterstream_{uuid.uuid4().hex}",
-    )
+    root = scratch_root(root, "enterstream")
     records = spark.read.parquet(customer_path).select(
         "c_custkey", "c_name"
     )
@@ -464,7 +445,6 @@ def run_streaming_entity_erasure(
         ).repartition(n_batches).write.mode("overwrite").parquet(staged)
 
     tomb_dir = os.path.join(root, "tombstones")
-    done_in_run = {"n": 0}
 
     def ingest(batch_df, batch_id):
         erased = batch_df.select("id").localCheckpoint(eager=True)
@@ -520,24 +500,10 @@ def run_streaming_entity_erasure(
         erased.write.mode("overwrite").parquet(
             os.path.join(tomb_dir, f"batch={batch_id}")
         )
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            # crash AFTER the sink writes, BEFORE the checkpoint
-            # commit — the replay must rewrite only its own slices
-            raise RuntimeError("injected crash (recovery test)")
 
-    stream = (
-        spark.readStream.schema("id long")
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
+    run_microbatches(
+        staged_stream(spark, root, "id long"), root, ingest,
+        fail_after_batches,
     )
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
     return serve_entity_labels(spark, root)

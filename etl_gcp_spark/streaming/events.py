@@ -7,11 +7,14 @@ watermark, and session windows — all built-ins (``F.window``,
 ``dropDuplicatesWithinWatermark``, ``F.session_window``), no custom
 state management.
 
-Each helper runs a bounded "replay" of a parquet events directory with
-``trigger(availableNow=True)`` into a memory sink and returns the
-result as a batch DataFrame — which is also how the driver's
-correctness harness exercises the streaming path. In production the
-same plan reads a live source (Kafka/files) with a real sink; only the
+Each stateful helper runs a bounded "replay" of a parquet events
+directory with ``trigger(availableNow=True)`` into a memory sink
+(:func:`_run_to_memory`) and returns the result as a batch DataFrame —
+which is also how the driver's correctness harness exercises the
+streaming path. The durable-sink runners further down drive
+``foreachBatch`` bodies through the shared runner in
+:mod:`~etl_gcp_spark.streaming.staging`. In production the same plan
+reads a live source (Kafka/files) with a real sink; only the
 ``readStream``/``writeStream`` edges change, the transformation plan
 is identical — that is the point of Structured Streaming.
 """
@@ -20,16 +23,19 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_gcp_spark.streaming.staging import (
-    mark_staged,
+    PINNED_CONF,
+    child_session,
+    run_microbatches,
+    scratch_root,
     stage_ordered_ranges,
     staged_ready,
+    staged_stream,
 )
 
 EVENTS_SCHEMA = (
@@ -37,12 +43,14 @@ EVENTS_SCHEMA = (
     "event_type string, value double, props string"
 )
 # variant for data whose ts is parquet TIMESTAMP(NANOS): Spark's reader
-# rejects that physical type, so it is declared long (nanosAsLong) and
-# truncated to microsecond timestamps in _stream_events.
+# rejects that physical type, so it is declared long (nanosAsLong, set
+# on the reading child session) and truncated to microsecond timestamps
+# in _load_events.
 EVENTS_SCHEMA_NS = (
     "event_id long, ts long, user_id long, "
     "event_type string, value double, props string"
 )
+NANOS_AS_LONG = {"spark.sql.legacy.parquet.nanosAsLong": "true"}
 
 
 def _ts_is_nanos(events_path: str) -> bool:
@@ -51,68 +59,60 @@ def _ts_is_nanos(events_path: str) -> bool:
     return "ts" in _nanos_timestamp_cols(events_path)
 
 
-def _stream_events(spark: SparkSession, events_path: str) -> DataFrame:
-    """File-source stream over a single parquet file or directory.
-
-    The file source requires a directory; a lone ``events.parquet``
-    file is staged into a temp dir (cheap metadata copy at test scale;
-    production points at an arriving-files directory). ``ts`` stored
-    as TIMESTAMP(NANOS) — which Spark's parquet reader rejects — is
-    detected from the footer and read long-then-truncated to
-    microsecond timestamps, same as the batch reader.
-    """
-    if os.path.isfile(events_path):
-        staged = os.path.join(
-            tempfile.gettempdir(), f"etl_gcp_spark_stream_{uuid.uuid4().hex}"
-        )
-        os.makedirs(staged)
-        shutil.copy(events_path, os.path.join(staged, "part-0.parquet"))
-        events_path = staged
+def _load_events(reader, events_path: str) -> DataFrame:
+    """Load the events through ``reader`` (``session.read`` or
+    ``session.readStream``). ``ts`` stored as TIMESTAMP(NANOS) — which
+    Spark's parquet reader rejects — is detected from the footer and
+    read long-then-truncated to microsecond timestamps, same as the
+    batch reader; the session behind ``reader`` must then carry
+    :data:`NANOS_AS_LONG`."""
     if not _ts_is_nanos(events_path):
-        return (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .format("parquet")
-            .load(events_path)
-        )
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA_NS)
-        .format("parquet")
-        .load(events_path)
-    )
-    return stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        return reader.schema(EVENTS_SCHEMA).format("parquet").load(events_path)
+    raw = reader.schema(EVENTS_SCHEMA_NS).format("parquet").load(events_path)
+    return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
 
 
 def _run_to_memory(
-    result: DataFrame, *, output_mode: str, state_partitions: int = 8
+    spark: SparkSession, events_path: str, plan, *, output_mode: str
 ) -> DataFrame:
-    """Drain an ephemeral stream to a memory sink and return the table.
+    """Replay the events through ``plan`` into a memory sink and
+    return the sink's table.
 
-    ``state_partitions`` pins ``spark.sql.shuffle.partitions`` for the
-    query's lifetime: a streaming query creates one state store PER
-    shuffle partition, and per-store open/commit overhead dominates
-    small-to-medium stateful streams (measured on the interval join at
-    sf0.1: 32 partitions → 15.0 s, 8 → 3.3 s, same 371 rows). The
-    count is fixed at first start and checkpointed, so it must be
-    chosen per query, not inherited from the batch-tuned session; on a
-    real cluster size it to executor-core count instead.
+    ``plan(events)`` builds the streaming query; ``events()`` opens one
+    file stream over the events (a stream-stream join opens two). The
+    query runs on a child session (:func:`~etl_gcp_spark.streaming.
+    staging.child_session`): the state-store count is pinned at
+    ``STATE_PARTITIONS`` and the nanos reader flag set there, so the
+    caller's session is never written. The returned table lives on that
+    child too. The file source needs a directory, so a lone
+    ``events.parquet`` is copied into a temp dir (cheap at test scale;
+    production points at an arriving-files directory), and the copy is
+    removed once the query has drained — the rows then live in the
+    sink.
     """
-    spark = result.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    src = events_path
+    if os.path.isfile(events_path):
+        src = scratch_root(None, "stream")
+        os.makedirs(src)
+        shutil.copy(events_path, os.path.join(src, "part-0.parquet"))
+    session = child_session(
+        spark, {**PINNED_CONF, **(NANOS_AS_LONG if _ts_is_nanos(src) else {})}
+    )
     name = f"mem_{uuid.uuid4().hex}"
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        q = (
-            result.writeStream.format("memory")
+        (
+            plan(lambda: _load_events(session.readStream, src))
+            .writeStream.format("memory")
             .queryName(name)
             .outputMode(output_mode)
             .trigger(availableNow=True)
             .start()
+            .awaitTermination()
         )
-        q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    out = spark.table(name)
+        if src != events_path:
+            shutil.rmtree(src, ignore_errors=True)
+    out = session.table(name)
     # drop the catalog entry NOW: `out` already holds the resolved
     # memory-sink relation (same rows), but without the drop the sink's
     # row buffer stays registered — and therefore referenced — for the
@@ -120,7 +120,7 @@ def _run_to_memory(
     # accumulates every streaming result ever produced as driver memory
     # debt that later queries pay for in GC (guide §5). After the drop
     # the buffer is released as soon as the caller lets go of `out`.
-    spark.catalog.dropTempView(name)
+    session.catalog.dropTempView(name)
     return out
 
 
@@ -133,16 +133,20 @@ def run_streaming_hourly_counts(
     watermark are finalized and evicted — the mechanism that keeps
     state finite on an unbounded stream.
     """
-    stream = _stream_events(spark, events_path)
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
-    )
+    def plan(events):
+        return (
+            events()
+            .withWatermark("ts", watermark)
+            .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
+            .agg(F.count(F.lit(1)).alias("n_events"))
+            .select(
+                F.col("w.start").alias("window_start"), "event_type", "n_events"
+            )
+        )
+
     # complete mode: a bounded replay must also emit the windows still
     # open at end-of-stream (append would hold them in state forever).
-    return _run_to_memory(agg, output_mode="complete")
+    return _run_to_memory(spark, events_path, plan, output_mode="complete")
 
 
 def run_streaming_dedup(
@@ -155,11 +159,14 @@ def run_streaming_dedup(
     streaming analog of the reference's full-row dedup (D1) with
     bounded memory.
     """
-    stream = _stream_events(spark, events_path)
-    deduped = stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-    return _run_to_memory(deduped, output_mode="append")
+    def plan(events):
+        return (
+            events()
+            .withWatermark("ts", watermark)
+            .dropDuplicatesWithinWatermark(["event_id"])
+        )
+
+    return _run_to_memory(spark, events_path, plan, output_mode="append")
 
 
 def run_streaming_sessions(
@@ -176,19 +183,21 @@ def run_streaming_sessions(
     possible. Batch analog (oracle-checkable lag/cumsum formulation):
     :func:`etl_gcp_spark.operators.events.sessionize`.
     """
-    stream = _stream_events(spark, events_path)
-    sessions = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), F.col("user_id"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
+    def plan(events):
+        return (
+            events()
+            .withWatermark("ts", watermark)
+            .groupBy(F.session_window("ts", gap).alias("w"), F.col("user_id"))
+            .agg(F.count(F.lit(1)).alias("n_events"))
+            .select(
+                "user_id",
+                F.col("w.start").alias("session_start"),
+                F.col("w.end").alias("session_end"),
+                "n_events",
+            )
         )
-    )
-    return _run_to_memory(sessions, output_mode="complete")
+
+    return _run_to_memory(spark, events_path, plan, output_mode="complete")
 
 
 USER_STATS_OUTPUT = (
@@ -243,26 +252,27 @@ def run_streaming_user_stats(
             }
         )
 
-    stream = _stream_events(spark, events_path)
-    # state updates key on raw long micro-seconds; timestamps are
-    # reconstructed inside the kernel so no tz ambiguity enters state
-    raw = stream.select(
-        "user_id",
-        # unix_micros, NOT cast("long") (that truncates to seconds);
-        # kernel expects ns int64
-        (F.unix_micros(F.col("ts")) * 1000).alias("ts"),
-        "value",
-    )
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    updated = raw.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=USER_STATS_OUTPUT,
-        stateStructType=USER_STATS_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    snapshots = _run_to_memory(updated, output_mode="update")
+    def plan(events):
+        # state updates key on raw long micro-seconds; timestamps are
+        # reconstructed inside the kernel so no tz ambiguity enters state
+        raw = events().select(
+            "user_id",
+            # unix_micros, NOT cast("long") (that truncates to seconds);
+            # kernel expects ns int64
+            (F.unix_micros(F.col("ts")) * 1000).alias("ts"),
+            "value",
+        )
+        return raw.groupBy("user_id").applyInPandasWithState(
+            update,
+            outputStructType=USER_STATS_OUTPUT,
+            stateStructType=USER_STATS_STATE,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+
+    snapshots = _run_to_memory(spark, events_path, plan, output_mode="update")
     # last snapshot per user = the one with the highest event count
     from pyspark.sql import Window
 
@@ -303,37 +313,39 @@ def run_streaming_click_purchase_join(
     incompleteness of outer streaming joins rather than papering
     over it.
     """
-    clicks = (
-        _stream_events(spark, events_path)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
+    def plan(events):
+        clicks = (
+            events()
+            .filter(F.col("event_type") == "click")
+            .select(
+                F.col("user_id").alias("c_user"),
+                F.col("event_id").alias("click_id"),
+                F.col("ts").alias("click_ts"),
+            )
+            .withWatermark("click_ts", watermark)
         )
-        .withWatermark("click_ts", watermark)
-    )
-    purchases = (
-        _stream_events(spark, events_path)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            "user_id",
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
+        purchases = (
+            events()
+            .filter(F.col("event_type") == "purchase")
+            .select(
+                "user_id",
+                F.col("event_id").alias("purchase_id"),
+                F.col("ts").alias("purchase_ts"),
+            )
+            .withWatermark("purchase_ts", watermark)
         )
-        .withWatermark("purchase_ts", watermark)
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("user_id") == F.col("c_user"))
-        & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (
-            F.col("click_ts")
-            >= F.col("purchase_ts") - F.expr(f"INTERVAL {lookback}")
-        ),
-        how,
-    ).select("purchase_id", "user_id", "purchase_ts", "click_id", "click_ts")
-    return _run_to_memory(joined, output_mode="append")
+        return purchases.join(
+            clicks,
+            (F.col("user_id") == F.col("c_user"))
+            & (F.col("click_ts") <= F.col("purchase_ts"))
+            & (
+                F.col("click_ts")
+                >= F.col("purchase_ts") - F.expr(f"INTERVAL {lookback}")
+            ),
+            how,
+        ).select("purchase_id", "user_id", "purchase_ts", "click_id", "click_ts")
+
+    return _run_to_memory(spark, events_path, plan, output_mode="append")
 
 
 def run_streaming_upsert(
@@ -377,36 +389,21 @@ def run_streaming_upsert(
 
     from etl_gcp_spark.operators.cdc import cdc_upsert
 
-    root = root or os.path.join(
-        tempfile.gettempdir(), f"etl_gcp_spark_upsert_{uuid.uuid4().hex}"
-    )
+    root = scratch_root(root, "upsert")
     staged = os.path.join(root, "in")
     if not staged_ready(staged):
         # normalize ts to microsecond TIMESTAMP at stage time so the
         # stream schema is uniform regardless of the physical unit
-        if _ts_is_nanos(events_path):
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            src = (
-                spark.read.schema(EVENTS_SCHEMA_NS)
-                .format("parquet")
-                .load(events_path)
-                .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-            )
-        else:
-            src = spark.read.schema(EVENTS_SCHEMA).format("parquet").load(
-                events_path
-            )
-        src.repartition(n_batches).write.mode("overwrite").parquet(staged)
-
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
-    )
+        session = (
+            child_session(spark, NANOS_AS_LONG)
+            if _ts_is_nanos(events_path)
+            else spark
+        )
+        _load_events(session.read, events_path).repartition(n_batches).write.mode(
+            "overwrite"
+        ).parquet(staged)
 
     recency = lambda: [F.col("ts").desc(), F.col("event_id").desc()]  # noqa: E731
-    done_in_run = {"n": 0}
 
     def versions() -> dict[int, str]:
         try:
@@ -434,20 +431,11 @@ def run_streaming_upsert(
         merged.write.mode("overwrite").parquet(
             os.path.join(root, f"v{batch_id}")
         )
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            # crash AFTER the sink write, BEFORE the checkpoint commit
-            # — the adversarial point: the engine must replay this
-            # batch_id and the overwrite above must absorb the replay
-            raise RuntimeError("injected crash (recovery test)")
 
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    run_microbatches(
+        staged_stream(spark, root, EVENTS_SCHEMA), root, merge,
+        fail_after_batches,
     )
-    q.awaitTermination()
     final = versions()
     # retention: predecessor versions exist only for crash recovery
     # (a replayed batch rereads version < batch_id). Once the stream
@@ -455,8 +443,6 @@ def run_streaming_upsert(
     # continuous ingest would otherwise accumulate the full history.
     # Never pruned mid-run, so a crash before this point keeps every
     # version a resumed run could need.
-    import shutil
-
     for v, p in final.items():
         if v != max(final):
             shutil.rmtree(p, ignore_errors=True)
@@ -488,17 +474,19 @@ def run_streaming_enrich(
     """
     from pyspark.sql.functions import broadcast
 
-    stream = _stream_events(spark, events_path).withColumn(
-        "join_key", F.expr(key_expr)
-    )
-    joined = stream.join(broadcast(dim), stream["join_key"] == dim[dim.columns[0]])
-    agg = joined.groupBy(dim[dim.columns[1]]).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum(F.col("value").cast("decimal(28,8)")), 4)
-        .cast("double")
-        .alias("value_total"),
-    )
-    return _run_to_memory(agg, output_mode="complete")
+    def plan(events):
+        stream = events().withColumn("join_key", F.expr(key_expr))
+        joined = stream.join(
+            broadcast(dim), stream["join_key"] == dim[dim.columns[0]]
+        )
+        return joined.groupBy(dim[dim.columns[1]]).agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum(F.col("value").cast("decimal(28,8)")), 4)
+            .cast("double")
+            .alias("value_total"),
+        )
+
+    return _run_to_memory(spark, events_path, plan, output_mode="complete")
 
 
 def run_streaming_minhash_dedup(
@@ -553,9 +541,7 @@ def run_streaming_minhash_dedup(
         with_shingles,
     )
 
-    root = root or os.path.join(
-        tempfile.gettempdir(), f"etl_gcp_spark_sdedup_{uuid.uuid4().hex}"
-    )
+    root = scratch_root(root, "sdedup")
     staged = os.path.join(root, "in")
     if not staged_ready(staged):
         docs = spark.read.parquet(docs_path).select("doc_id", "text")
@@ -564,17 +550,9 @@ def run_streaming_minhash_dedup(
         # sequential filtered scans/writes)
         stage_ordered_ranges(docs, "doc_id", staged, n_batches)
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
-    )
-
     out_dir = os.path.join(root, "kept")
     docs_dir = os.path.join(root, "index_docs")
     banded_dir = os.path.join(root, "index_banded")
-    done_in_run = {"n": 0}
 
     def _slices(parent: str, before: int) -> list[str]:
         """Index slices from batches strictly before ``before``."""
@@ -657,28 +635,16 @@ def run_streaming_minhash_dedup(
         sh_b.unpersist()
         bb.unpersist()
         batch.unpersist()
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            # crash AFTER the sink writes, BEFORE the checkpoint
-            # commit — the replayed batch must rewrite its own subdirs
-            raise RuntimeError("injected crash (recovery test)")
 
-    # same state-partition discipline as _run_to_memory: each
-    # microbatch's LSH band join shuffles a ~corpus/n_batches slice,
-    # and 32-partition task overhead dominates it (see the measured
-    # cliff documented on _run_to_memory)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    # pinned like _run_to_memory: each microbatch's LSH band join
+    # shuffles a ~corpus/n_batches slice, and 32-partition task
+    # overhead dominates it (see STATE_PARTITIONS)
+    run_microbatches(
+        staged_stream(
+            child_session(spark, PINNED_CONF), root, "doc_id long, text string"
+        ),
+        root, merge, fail_after_batches,
+    )
     return spark.read.parquet(os.path.join(out_dir, "b*"))
 
 
@@ -720,9 +686,7 @@ def run_streaming_cms(
         cms_point_queries,
     )
 
-    root = root or os.path.join(
-        tempfile.gettempdir(), f"etl_gcp_spark_scms_{uuid.uuid4().hex}"
-    )
+    root = scratch_root(root, "scms")
     staged = os.path.join(root, "in")
     keys = events.filter(F.col(key_col).isNotNull()).select(
         F.col(key_col).cast("long").alias(key_col)
@@ -731,14 +695,7 @@ def run_streaming_cms(
         # one-pass key-range staging (r10; see stage_ordered_ranges)
         stage_ordered_ranges(keys, key_col, staged, n_batches)
 
-    stream = (
-        spark.readStream.schema(f"{key_col} long")
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
-    )
     sketch_dir = os.path.join(root, "sketch")
-    done_in_run = {"n": 0}
 
     def fold(batch_df, batch_id):
         # per-batch subdir keyed by batch_id, overwrite mode: a batch
@@ -749,22 +706,13 @@ def run_streaming_cms(
         cms_build(batch_df, key_col, width=width).write.mode(
             "overwrite"
         ).parquet(os.path.join(sketch_dir, f"b{batch_id}"))
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            raise RuntimeError("injected crash (recovery test)")
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_microbatches(
+        staged_stream(
+            child_session(spark, PINNED_CONF), root, f"{key_col} long"
+        ),
+        root, fold, fail_after_batches,
+    )
 
     merged = (
         spark.read.parquet(os.path.join(sketch_dir, "b*"))
@@ -807,9 +755,7 @@ def run_streaming_topk(
     the batch oracle applies the same WHERE — stream and batch count
     the same rows.
     """
-    root = root or os.path.join(
-        tempfile.gettempdir(), f"etl_gcp_spark_stopk_{uuid.uuid4().hex}"
-    )
+    root = scratch_root(root, "stopk")
     staged = os.path.join(root, "in")
     keys = events.filter(
         F.col("event_id").isNotNull() & F.col(key_col).isNotNull()
@@ -818,14 +764,7 @@ def run_streaming_topk(
         # one-pass key-range staging (r10; see stage_ordered_ranges)
         stage_ordered_ranges(keys, "event_id", staged, n_batches)
 
-    stream = (
-        spark.readStream.schema(f"event_id long, {key_col} string")
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
-    )
     counts_dir = os.path.join(root, "counts")
-    done_in_run = {"n": 0}
 
     def fold(batch_df, batch_id):
         # batch_id-keyed overwrite: replay-idempotent (see
@@ -835,23 +774,15 @@ def run_streaming_topk(
         ).write.mode("overwrite").parquet(
             os.path.join(counts_dir, f"b{batch_id}")
         )
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            raise RuntimeError("injected crash (recovery test)")
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
+    run_microbatches(
+        staged_stream(
+            child_session(spark, PINNED_CONF),
+            root,
+            f"event_id long, {key_col} string",
+        ),
+        root, fold, fail_after_batches,
+    )
     return (
         spark.read.parquet(os.path.join(counts_dir, "b*"))
         .groupBy(key_col)
@@ -904,9 +835,7 @@ def run_streaming_quantiles(
         quantiles_from_bins,
     )
 
-    root = root or os.path.join(
-        tempfile.gettempdir(), f"etl_gcp_spark_squant_{uuid.uuid4().hex}"
-    )
+    root = scratch_root(root, "squant")
     staged = os.path.join(root, "in")
     rows = orders.filter(
         F.col(key_col).isNotNull() & F.col(value_col).isNotNull()
@@ -919,14 +848,7 @@ def run_streaming_quantiles(
         # helper (r10 — was approxQuantile + 4 sequential writes)
         stage_ordered_ranges(rows, key_col, staged, n_batches)
 
-    stream = (
-        spark.readStream.schema(f"{key_col} long, {value_col} double")
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
-    )
     bins_dir = os.path.join(root, "bins")
-    done_in_run = {"n": 0}
 
     def fold(batch_df, batch_id):
         # batch_id-keyed overwrite: replay-idempotent (see
@@ -936,23 +858,15 @@ def run_streaming_quantiles(
         ).write.mode("overwrite").parquet(
             os.path.join(bins_dir, f"b{batch_id}")
         )
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            raise RuntimeError("injected crash (recovery test)")
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
+    run_microbatches(
+        staged_stream(
+            child_session(spark, PINNED_CONF),
+            root,
+            f"{key_col} long, {value_col} double",
+        ),
+        root, fold, fail_after_batches,
+    )
     return quantiles_from_bins(
         spark.read.parquet(os.path.join(bins_dir, "b*")),
         lo=lo,
@@ -1002,9 +916,7 @@ def run_streaming_hll(
         hll_registers,
     )
 
-    root = root or os.path.join(
-        tempfile.gettempdir(), f"etl_gcp_spark_shll_{uuid.uuid4().hex}"
-    )
+    root = scratch_root(root, "shll")
     staged = os.path.join(root, "in")
     rows = df.filter(F.col(key_col).isNotNull()).select(
         F.col(key_col).cast("long").alias(key_col), group_col
@@ -1013,14 +925,7 @@ def run_streaming_hll(
         # one-pass key-range staging (r10; see stage_ordered_ranges)
         stage_ordered_ranges(rows, key_col, staged, n_batches)
 
-    stream = (
-        spark.readStream.schema(f"{key_col} long, {group_col} string")
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
-    )
     regs_dir = os.path.join(root, "regs")
-    done_in_run = {"n": 0}
 
     def fold(batch_df, batch_id):
         hll_registers(batch_df, key_col, group_col).groupBy(
@@ -1028,23 +933,15 @@ def run_streaming_hll(
         ).agg(F.max("rho").alias("rho")).write.mode("overwrite").parquet(
             os.path.join(regs_dir, f"b{batch_id}")
         )
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            raise RuntimeError("injected crash (recovery test)")
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
+    run_microbatches(
+        staged_stream(
+            child_session(spark, PINNED_CONF),
+            root,
+            f"{key_col} long, {group_col} string",
+        ),
+        root, fold, fail_after_batches,
+    )
     merged = (
         spark.read.parquet(os.path.join(regs_dir, "b*"))
         .groupBy("grp", "idx")
@@ -1101,9 +998,7 @@ def run_streaming_markov(
     """
     from pyspark.sql import Window
 
-    root = root or os.path.join(
-        tempfile.gettempdir(), f"etl_gcp_spark_smkv_{uuid.uuid4().hex}"
-    )
+    root = scratch_root(root, "smkv")
     staged = os.path.join(root, "in")
     rows = events.filter(
         F.col("ts").isNotNull()
@@ -1119,17 +1014,8 @@ def run_streaming_markov(
         # one-pass time-range staging (r10; see stage_ordered_ranges)
         stage_ordered_ranges(rows, "us", staged, n_batches)
 
-    stream = (
-        spark.readStream.schema(
-            "user_id long, us long, event_id long, event_type string"
-        )
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
-    )
     counts_dir = os.path.join(root, "counts")
     state_dir = os.path.join(root, "state")
-    done_in_run = {"n": 0}
 
     def _latest_per_user(df):
         w = Window.partitionBy("user_id").orderBy(
@@ -1168,7 +1054,7 @@ def run_streaming_markov(
         )
         if prev_slices:
             prev_state = _latest_per_user(
-                spark.read.parquet(
+                batch_df.sparkSession.read.parquet(
                     *[os.path.join(state_dir, d) for d in prev_slices]
                 )
             ).select(
@@ -1186,23 +1072,15 @@ def run_streaming_markov(
         _latest_per_user(batch_df).write.mode("overwrite").parquet(
             os.path.join(state_dir, f"b{batch_id}")
         )
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            raise RuntimeError("injected crash (recovery test)")
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
+    run_microbatches(
+        staged_stream(
+            child_session(spark, PINNED_CONF),
+            root,
+            "user_id long, us long, event_id long, event_type string",
+        ),
+        root, fold, fail_after_batches,
+    )
     merged = (
         spark.read.parquet(os.path.join(counts_dir, "b*"))
         .groupBy("prev_type", "event_type")

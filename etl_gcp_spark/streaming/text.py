@@ -16,14 +16,17 @@ and nothing else (the same discipline as the IVF append trees).
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_gcp_spark.metering import timed as _timed_phase
-from etl_gcp_spark.streaming.staging import staged_ready
+from etl_gcp_spark.streaming.staging import (
+    run_microbatches,
+    scratch_root,
+    staged_ready,
+    staged_stream,
+)
 
 _metered_build = _timed_phase("build")
 
@@ -76,9 +79,7 @@ def run_streaming_text_ingest(
     )
     from etl_gcp_spark.operators.encoding import _poly_hash
 
-    root = root or os.path.join(
-        tempfile.gettempdir(), f"etl_gcp_spark_textstream_{uuid.uuid4().hex}"
-    )
+    root = scratch_root(root, "textstream")
     index = os.path.join(root, "index")
     appends = os.path.join(index, "appends")
     docs = spark.read.parquet(documents_path)
@@ -96,8 +97,6 @@ def run_streaming_text_ingest(
         docs.filter(F.col("doc_id") >= train_max_id).repartition(
             n_batches
         ).write.mode("overwrite").parquet(staged)
-
-    done_in_run = {"n": 0}
 
     def ingest(batch_df, batch_id):
         toks = batch_df.select(
@@ -144,26 +143,11 @@ def run_streaming_text_ingest(
             )
         finally:
             posting.unpersist()
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            # crash AFTER the sink writes, BEFORE the checkpoint
-            # commit — the engine must replay this batch_id and the
-            # overwrites above must absorb the replay
-            raise RuntimeError("injected crash (recovery test)")
 
-    stream = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
+    run_microbatches(
+        staged_stream(spark, root, DOCUMENTS_SCHEMA), root, ingest,
+        fail_after_batches,
     )
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
     # serve over base ∪ appends with bucket pruning on both trees
     buckets = sorted({poly_hash_py(t) % n_buckets for t in query_terms})
@@ -235,9 +219,7 @@ def run_streaming_text_erasure(
         text_index_build,
     )
 
-    root = root or os.path.join(
-        tempfile.gettempdir(), f"etl_gcp_spark_texterstream_{uuid.uuid4().hex}"
-    )
+    root = scratch_root(root, "texterstream")
     index = os.path.join(root, "index")
     docs = spark.read.parquet(documents_path)
 
@@ -250,31 +232,15 @@ def run_streaming_text_erasure(
             "doc_id"
         ).repartition(n_batches).write.mode("overwrite").parquet(staged)
 
-    done_in_run = {"n": 0}
-
     def ingest(batch_df, batch_id):
         batch_df.select("doc_id").write.mode("overwrite").parquet(
             os.path.join(index, "tombstones", f"batch={batch_id}")
         )
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            # crash AFTER the sink writes, BEFORE the checkpoint
-            # commit — the replay must rewrite only its own slice
-            raise RuntimeError("injected crash (recovery test)")
 
-    stream = (
-        spark.readStream.schema("doc_id long")
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
+    run_microbatches(
+        staged_stream(spark, root, "doc_id long"), root, ingest,
+        fail_after_batches,
     )
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
     return bm25_index_topk(spark, index, query_terms, k=k, n_buckets=n_buckets)
 
@@ -330,10 +296,7 @@ def run_streaming_decontamination(
     )
     from etl_gcp_spark.operators.text_dedup import with_shingles
 
-    root = root or os.path.join(
-        tempfile.gettempdir(),
-        f"etl_gcp_spark_decontstream_{uuid.uuid4().hex}",
-    )
+    root = scratch_root(root, "decontstream")
     docs = spark.read.parquet(documents_path).select(
         "doc_id", "text", "source"
     )
@@ -376,7 +339,6 @@ def run_streaming_decontamination(
         )
 
     bg_dir = os.path.join(root, "benchgrams")
-    done_in_run = {"n": 0}
 
     def ingest(batch_df, batch_id):
         batch_grams = (
@@ -439,25 +401,11 @@ def run_streaming_decontamination(
         ).write.mode("overwrite").parquet(
             os.path.join(root, "verdicts", f"batch={batch_id}")
         )
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            # crash AFTER the sink writes, BEFORE the checkpoint
-            # commit — the replay must rewrite only its own slices
-            raise RuntimeError("injected crash (recovery test)")
 
-    stream = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
+    run_microbatches(
+        staged_stream(spark, root, DOCUMENTS_SCHEMA), root, ingest,
+        fail_after_batches,
     )
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
     corpus = spark.read.parquet(corpus_path)
     v_dir = os.path.join(root, "verdicts")

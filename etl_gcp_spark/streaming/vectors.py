@@ -22,8 +22,6 @@ durable-sink streaming ops.
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,7 +30,12 @@ from pyspark.sql import functions as F
 # serve_sec separately — at scale the build is a rare batch job while
 # serve latency is the tracked number (etl_gcp_spark/metering.py)
 from etl_gcp_spark.metering import timed as _timed_phase
-from etl_gcp_spark.streaming.staging import staged_ready
+from etl_gcp_spark.streaming.staging import (
+    run_microbatches,
+    scratch_root,
+    staged_ready,
+    staged_stream,
+)
 
 _metered_build = _timed_phase("build")
 
@@ -87,9 +90,7 @@ def run_streaming_ivf_ingest(
     )
 
     query_ids = list(range(10)) if query_ids is None else query_ids
-    root = root or os.path.join(
-        tempfile.gettempdir(), f"etl_gcp_spark_ivfstream_{uuid.uuid4().hex}"
-    )
+    root = scratch_root(root, "ivfstream")
     index = os.path.join(root, "index")
     appends = os.path.join(index, "appends")
     emb = spark.read.parquet(embeddings_path).select("vec_id", "embedding")
@@ -115,7 +116,6 @@ def run_streaming_ivf_ingest(
     )
     labels = [int(r["cell"]) for r in cents]
     cmat = [list(r["centroid"]) for r in cents]
-    done_in_run = {"n": 0}
 
     def ingest(batch_df, batch_id):
         from etl_gcp_spark.functions.similarity import (
@@ -135,26 +135,11 @@ def run_streaming_ivf_ingest(
             .mode("overwrite")
             .parquet(os.path.join(appends, f"batch={batch_id}"))
         )
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            # crash AFTER the sink write, BEFORE the checkpoint commit
-            # — the engine must replay this batch_id and the overwrite
-            # above must absorb the replay
-            raise RuntimeError("injected crash (recovery test)")
 
-    stream = (
-        spark.readStream.schema(EMBEDDINGS_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
+    run_microbatches(
+        staged_stream(spark, root, EMBEDDINGS_SCHEMA), root, ingest,
+        fail_after_batches,
     )
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
     if compact:
         from etl_gcp_spark.functions.similarity import ivf_index_compact
@@ -218,10 +203,7 @@ def run_streaming_drift_report(
         ivf_train,
     )
 
-    root = root or os.path.join(
-        tempfile.gettempdir(),
-        f"etl_gcp_spark_driftstream_{uuid.uuid4().hex}",
-    )
+    root = scratch_root(root, "driftstream")
     state = os.path.join(root, "state")
     emb = spark.read.parquet(embeddings_path).select("vec_id", "embedding")
 
@@ -248,8 +230,6 @@ def run_streaming_drift_report(
         c = F.array(*[F.lit(float(x)) for x in cent])
         return _dot(v, c) / (F.sqrt(_dot(v, v)) * F.sqrt(_dot(c, c)))
 
-    done_in_run = {"n": 0}
-
     def ingest(batch_df, batch_id):
         allv = batch_df.select(
             "vec_id", _as_double(F.col("embedding")).alias("__v")
@@ -273,25 +253,11 @@ def run_streaming_drift_report(
             .write.mode("overwrite")
             .parquet(os.path.join(state, f"batch={batch_id}"))
         )
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            # crash AFTER the state write, BEFORE the checkpoint
-            # commit — replay must absorb the overwrite
-            raise RuntimeError("injected crash (recovery test)")
 
-    stream = (
-        spark.readStream.schema(EMBEDDINGS_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
+    run_microbatches(
+        staged_stream(spark, root, EMBEDDINGS_SCHEMA), root, ingest,
+        fail_after_batches,
     )
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
     g = (
         spark.read.option("basePath", state)
@@ -371,9 +337,7 @@ def run_streaming_ivf_erasure(
         ivf_index_topk,
     )
 
-    root = root or os.path.join(
-        tempfile.gettempdir(), f"etl_gcp_spark_ivferstream_{uuid.uuid4().hex}"
-    )
+    root = scratch_root(root, "ivferstream")
     index = os.path.join(root, "index")
     emb = spark.read.parquet(embeddings_path)
 
@@ -386,31 +350,15 @@ def run_streaming_ivf_erasure(
             "vec_id"
         ).repartition(n_batches).write.mode("overwrite").parquet(staged)
 
-    done_in_run = {"n": 0}
-
     def ingest(batch_df, batch_id):
         batch_df.select("vec_id").write.mode("overwrite").parquet(
             os.path.join(index, "tombstones", f"batch={batch_id}")
         )
-        done_in_run["n"] += 1
-        if fail_after_batches and done_in_run["n"] >= fail_after_batches:
-            # crash AFTER the sink writes, BEFORE the checkpoint
-            # commit — the replay must rewrite only its own slice
-            raise RuntimeError("injected crash (recovery test)")
 
-    stream = (
-        spark.readStream.schema("vec_id long")
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(staged)
+    run_microbatches(
+        staged_stream(spark, root, "vec_id long"), root, ingest,
+        fail_after_batches,
     )
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
     return ivf_index_topk(
         spark, index, query_ids=query_ids or list(range(10)),

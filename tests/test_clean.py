@@ -11,14 +11,12 @@ from __future__ import annotations
 import datetime as dt
 
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from etl_gcp_spark.operators.clean import (
     audit_stamp,
     clean,
     drop_meta,
     normalize_columns,
-    trim_strings,
 )
 
 
@@ -69,13 +67,6 @@ def test_audit_stamp_and_drop_meta(spark):
     assert row.loaded_at == fixed
     assert row.load_date == fixed.date()
     assert drop_meta(stamped).columns == ["a"]
-
-
-def test_trim_strings_only_touches_strings(spark):
-    df = spark.createDataFrame([Row(s="  pad  ", n=3)])
-    row = trim_strings(df).collect()[0]
-    assert row.s == "pad"
-    assert row.n == 3
 
 
 def test_clean_is_single_projection(spark):

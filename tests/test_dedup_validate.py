@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from etl_gcp_spark.operators.dedup import dedup, dedup_keep_first, dup_count
 from etl_gcp_spark.operators.quality import (
@@ -14,7 +13,6 @@ from etl_gcp_spark.operators.quality import (
 )
 from etl_gcp_spark.operators.validate import (
     not_null_rule,
-    null_counts,
     order_rule,
     range_rule,
     violation_summary,
@@ -104,11 +102,6 @@ def test_violations_union_dedup(spark):
 def test_violation_summary_counts(spark):
     got = {r.rule: r.violations for r in violation_summary(_quality_df(spark), _rules()).collect()}
     assert got == {"ys_gt_ye": 1, "val_out_of_range": 2, "topic_null": 1}
-
-
-def test_null_counts_single_pass(spark):
-    row = null_counts(_quality_df(spark), ["topic", "ys"]).collect()[0]
-    assert row.topic_nulls == 1 and row.ys_nulls == 0
 
 
 def test_quality_metrics_and_gate(spark):

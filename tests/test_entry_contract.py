@@ -117,9 +117,10 @@ def test_registry_outputs_scalar_only(spark, sf_dir):
     (register_views over the same sf_dir) or entry-private names; the
     pin ledger is keyed per thread in __spark_entry__; the one shared
     fixed path, the simhash oracle side table two entries write, is
-    written under a per-name lock; per-entry
-    shuffle-partition conf twiddles alter only plan shape, never
-    schemas or values."""
+    written under a per-name lock; streaming runners that need their
+    own conf (state-store partitions, the nanos reader flag) run on a
+    child session, so the only shared-conf writes left are reader
+    pins that always set the same value (UTC timezone, nanosAsLong)."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.sql.types import ArrayType, MapType, StructType

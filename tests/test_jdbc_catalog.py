@@ -74,18 +74,3 @@ def test_jdbc_partitioned_requires_full_spec(spark):
             partition_column="K",
             lower_bound=0,
         )
-
-
-def test_catalog_probes(spark):
-    from etl_gcp_spark.schemas import list_columns, table_exists
-
-    _df(spark).createOrReplaceTempView("probe_view")
-    assert table_exists(spark, "probe_view")
-    assert not table_exists(spark, "no_such_table_anywhere")
-    cols = {
-        r.column_name: (r.data_type, r.nullable)
-        for r in list_columns(spark, "probe_view").collect()
-    }
-    assert cols["k"][0] == "bigint"
-    assert cols["name"][0] == "string"
-    assert set(cols) == {"k", "grp", "name"}

@@ -203,16 +203,3 @@ def test_hilbert_buckets_tighter_than_zorder_on_grid(spark):
         zorder_layout_stats(df, ["x", "y"], bits=6, n_buckets=16).collect()
     )
     assert hil <= zor
-
-
-def test_write_hilbert_roundtrip(spark, sf_dir):
-    from etl_gcp_spark.operators.layout import write_hilbert
-    from etl_gcp_spark.sources.readers import load_table
-
-    orders = load_table(spark, sf_dir, "orders").limit(1000)
-    path = os.path.join(tempfile.gettempdir(), "etl_gcp_spark_hilbert_test")
-    write_hilbert(orders, path, ["o_custkey", "o_totalprice"], n_files=4)
-    back = spark.read.parquet(path)
-    assert back.count() == 1000
-    assert "hkey" not in back.columns
-    assert set(back.columns) == set(orders.columns)

@@ -3,22 +3,18 @@
 Covers the reference's contracts: name normalization charset
 (data_extractor.py:387-390), dtype map with TEXT fallback
 (data_extractor.py:340-353), normalization-aware diff ignoring
-metadata columns (data_extractor.py:296-312), required-columns check
-(data_validator.py:142-160). Pure Python — no SparkSession needed.
+metadata columns (data_extractor.py:296-312). Pure Python — no SparkSession needed.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import types as T
 
 from etl_gcp_spark.schemas import (
     METADATA_COLUMNS,
     SchemaDiff,
     normalize_name,
-    require_columns,
     schema_diff,
-    schema_from_pandas,
     spark_type_for_pandas,
 )
 
@@ -41,15 +37,6 @@ def test_dtype_map_and_fallback():
     assert spark_type_for_pandas("category") == T.StringType()
     # TEXT fallback for anything unknown
     assert spark_type_for_pandas("complex128") == T.StringType()
-
-
-def test_schema_from_pandas_normalizes_names():
-    pdf = pd.DataFrame({"Year Start": [1], "Data.Value": [0.5], "Topic": ["x"]})
-    schema = schema_from_pandas(pdf)
-    assert schema.names == ["year_start", "data_value", "topic"]
-    assert schema["year_start"].dataType == T.LongType()
-    assert schema["data_value"].dataType == T.DoubleType()
-    assert schema["topic"].dataType == T.StringType()
 
 
 def _st(*fields: tuple[str, T.DataType]) -> T.StructType:
@@ -77,14 +64,6 @@ def test_schema_diff_reports_all_three_classes():
     assert d.missing_in_incoming == ["a"]
     assert d.type_mismatches == [("b", "string", "bigint")]
     assert not d.compatible
-
-
-def test_require_columns_normalization_aware():
-    schema = _st(("Year Start", T.LongType()), ("topic", T.StringType()))
-    assert require_columns(schema, ["year_start", "topic"]) == []
-    assert require_columns(schema, ["year_start", "missing_col"]) == [
-        "missing_col"
-    ]
 
 
 def test_metadata_columns_contract():

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from etl_gcp_spark.operators.quality import quality_metrics
 from etl_gcp_spark.sinks.writers import (
-    evolve_and_write,
     write_chunked_csv,
     write_table,
 )
@@ -95,18 +94,6 @@ def test_write_table_partition_pruning(spark, tmp_path):
     # partition filter must reach the scan (pruned layout, not a post-filter)
     assert "PartitionFilters: [isnotnull(k" in plan
     assert pruned.count() == 5
-
-
-def test_evolve_and_write_policy(spark, tmp_path):
-    path = str(tmp_path / "evo")
-    df = spark.createDataFrame([Row(a=1, b="x")])
-    assert evolve_and_write(df, path) == "create"
-    assert evolve_and_write(df, path) == "append"          # schema match
-    assert spark.read.parquet(path).count() == 2
-    drifted = spark.createDataFrame([Row(a=1, b="x", c=0.5)])
-    assert evolve_and_write(drifted, path) == "overwrite"  # mismatch
-    out = spark.read.parquet(path)
-    assert out.columns == ["a", "b", "c"] and out.count() == 1
 
 
 def test_quality_metrics_on_real_table(spark, sf_dir):
