@@ -43,6 +43,13 @@ import os
 # serve latency is the tracked number (etl_gcp_spark/metering.py)
 from etl_gcp_spark.metering import timed as _timed_phase
 from etl_gcp_spark.smalldf import small_df
+from etl_gcp_spark.streaming.staging import (
+    REQUEST_SLICE,
+    commit_swap,
+    heal_swap,
+    read_slices,
+    write_slice,
+)
 
 _metered_build = _timed_phase("build")
 
@@ -2738,19 +2745,21 @@ def ivf_index_append(
 
 
 def _ivf_tombstones(spark, path: str):
-    """The erased-vector set (vec_id rows) accumulated by
-    :func:`ivf_index_erase`, or None when nothing is erased."""
-    tomb = os.path.join(path, "tombstones")
-    if not os.path.isdir(tomb) or not os.listdir(tomb):
-        return None
-    return spark.read.parquet(tomb).select("vec_id")
+    """The erased-vector set (vec_id rows) of the ``path/tombstones``
+    slice store — request-path (:func:`ivf_index_erase`) and streamed
+    (``streaming/vectors.py``) erasures alike — or None when nothing
+    is erased."""
+    tomb = read_slices(spark, os.path.join(path, "tombstones"))
+    return None if tomb is None else tomb.select("vec_id")
 
 
 def ivf_index_erase(spark, path: str, vec_ids) -> None:
     """Logically erase vectors from the persisted IVF index — the
     vector-side right-to-be-forgotten (text twin:
     functions/text.py::text_index_erase; table twin: user_erasure).
-    O(|request|) tombstone APPEND; the cell-partitioned corpus is
+    O(|request|) tombstone APPEND to the tombstone store's
+    ``REQUEST_SLICE`` (streamed erasures own the batch_id slices, so
+    neither overwrites the other); the cell-partitioned corpus is
     never rewritten on the request path. Serves anti-join the
     tombstone set (broadcast — bounded by erasure volume between
     compactions), so erased vectors immediately stop appearing as
@@ -2770,14 +2779,13 @@ def ivf_index_erase(spark, path: str, vec_ids) -> None:
             spark,
             [(int(i),) for i in vec_ids], "vec_id long"
         ).coalesce(1)
-    df.write.mode("append").parquet(os.path.join(path, "tombstones"))
+    write_slice(df, os.path.join(path, "tombstones"), REQUEST_SLICE)
 
 
 @_metered_build
 def ivf_index_compact(spark, path: str) -> None:
-    """Fold the streaming append trees
-    (``path/appends/batch=<id>/cell=<n>/``, written by
-    ``streaming/vectors.py``) back into the base
+    """Fold the streaming append slice store (``path/appends``,
+    written by ``streaming/vectors.py``) back into the base
     ``path/vectors/cell=<n>/`` tree — ordinary parquet maintenance
     that bounds small-file count after a long streaming run. The
     rewrite is write-new-then-rename (never overwrite-in-place of a
@@ -2789,17 +2797,15 @@ def ivf_index_compact(spark, path: str) -> None:
     """
     import shutil
 
-    from etl_gcp_spark.streaming.staging import commit_swap, heal_swap
-
     vectors = os.path.join(path, "vectors")
     appends = os.path.join(path, "appends")
     heal_swap(vectors)
     tomb = _ivf_tombstones(spark, path)
-    if not os.path.isdir(appends) and tomb is None:
+    app = read_slices(spark, appends)
+    if app is None and tomb is None:
         return
     allv = spark.read.parquet(vectors)
-    cols = [c for c in allv.columns]
-    if os.path.isdir(appends):
+    if app is not None:
         # idempotent fold, DETERMINISTIC: a crash between commit_swap
         # and the appends cleanup below leaves a base that ALREADY
         # contains the folded rows — re-unioning the surviving
@@ -2812,9 +2818,7 @@ def ivf_index_compact(spark, path: str) -> None:
         # could nondeterministically persist the stale cell — a
         # vector parked in a partition the new centroids never probe.
         app = (
-            spark.read.option("basePath", appends)
-            .parquet(appends)
-            .select(*cols)
+            app.select(*allv.columns)
             .dropDuplicates(["vec_id"])
             .join(allv.select("vec_id"), "vec_id", "left_anti")
         )
@@ -2884,8 +2888,6 @@ def ivf_retrain_swap(
     """
     import shutil
 
-    from etl_gcp_spark.streaming.staging import commit_swap, heal_swap
-
     vectors = os.path.join(path, "vectors")
     centroids = os.path.join(path, "centroids")
     appends = os.path.join(path, "appends")
@@ -2893,12 +2895,9 @@ def ivf_retrain_swap(
     heal_swap(centroids)
     cur = spark.read.parquet(vectors)
     cols = list(cur.columns)
-    if os.path.isdir(appends):
-        cur = cur.unionByName(
-            spark.read.option("basePath", appends)
-            .parquet(appends)
-            .select(*cols)
-        )
+    app = read_slices(spark, appends)
+    if app is not None:
+        cur = cur.unionByName(app.select(*cols))
         # idempotent fold (same contract as ivf_index_compact): a
         # crash after commit_swap(vectors) but before the appends
         # cleanup leaves the folded rows in the new base — the

@@ -23,6 +23,13 @@ from pyspark.sql import functions as F
 # serve latency is the tracked number (etl_gcp_spark/metering.py)
 from etl_gcp_spark.metering import timed as _timed_phase
 from etl_gcp_spark.smalldf import small_df
+from etl_gcp_spark.streaming.staging import (
+    REQUEST_SLICE,
+    commit_swap,
+    heal_swap,
+    read_slices,
+    write_slice,
+)
 
 _metered_build = _timed_phase("build")
 
@@ -1427,21 +1434,12 @@ def poly_hash_py(tok: str) -> int:
 
 
 def _text_index_tombstones(spark, index_dir: str) -> DataFrame | None:
-    """The erased-doc set (doc_id rows) accumulated by
-    :func:`text_index_erase`, or None when nothing is erased."""
-    import os
-
-    tomb = f"{index_dir}/tombstones"
-    if not os.path.isdir(tomb) or not any(
-        e.endswith(".parquet")
-        or e == "_SUCCESS"
-        or e.startswith("part-")
-        or e.startswith("batch=")  # streamed deletion requests
-        for e in os.listdir(tomb)
-    ):
-        return None
-    df = spark.read.parquet(tomb)
-    return df.select("doc_id")
+    """The erased-doc set (doc_id rows) of the ``tombstones`` slice
+    store — request-path (:func:`text_index_erase`) and streamed
+    (``streaming/text.py``) erasures alike — or None when nothing is
+    erased."""
+    tomb = read_slices(spark, f"{index_dir}/tombstones")
+    return None if tomb is None else tomb.select("doc_id")
 
 
 def text_index_erase(spark, index_dir: str, doc_ids) -> None:
@@ -1449,8 +1447,10 @@ def text_index_erase(spark, index_dir: str, doc_ids) -> None:
     the right-to-be-forgotten operation a derived artifact needs: a
     user-deletion request must reach every downstream index, not just
     the source table (the table-side twin is operators/quality.py's
-    user_erasure). Erasure is an O(|request|) tombstone APPEND —
-    postings are NEVER rewritten on the request path, because a
+    user_erasure). Erasure is an O(|request|) tombstone APPEND to the
+    tombstone store's ``REQUEST_SLICE`` (streamed erasures own the
+    batch_id slices, so neither overwrites the other) — postings are
+    NEVER rewritten on the request path, because a
     100-TB index cannot rewrite terabytes per deletion request. Serve
     paths anti-join the tombstone set (broadcast — bounded by erasure
     volume between compactions; the compaction cadence is what bounds
@@ -1471,7 +1471,7 @@ def text_index_erase(spark, index_dir: str, doc_ids) -> None:
         df = small_df(
             spark, [(int(i),) for i in doc_ids], "doc_id long"
         ).coalesce(1)
-    df.write.mode("append").parquet(f"{index_dir}/tombstones")
+    write_slice(df, f"{index_dir}/tombstones", REQUEST_SLICE)
 
 
 def bm25_index_topk(
@@ -1735,10 +1735,7 @@ def text_index_compact(spark, index_dir: str, *, n_buckets: int = 64) -> None:
     moves bytes, not semantics: serving before and after returns
     identical results (pytest + the shared oracle).
     """
-    import os
     import shutil
-
-    from etl_gcp_spark.streaming.staging import commit_swap, heal_swap
 
     postings = f"{index_dir}/postings"
     heal_swap(postings)
@@ -1796,12 +1793,9 @@ def text_index_resize(spark, index_dir: str, *, n_buckets: int) -> None:
     bucket-invariant, so results are bit-equal before and after
     (pytest + the shared fused oracle).
     """
-    import os
     import shutil
 
     from etl_gcp_spark.operators.encoding import _poly_hash
-    from etl_gcp_spark.streaming.staging import commit_swap, heal_swap
-
     postings = f"{index_dir}/postings"
     doclen = f"{index_dir}/doclen"
     heal_swap(postings)

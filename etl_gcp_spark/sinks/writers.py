@@ -130,10 +130,7 @@ def compact_files(
     """
     df = spark.read.format(fmt).load(src_path)
     df.coalesce(target_files).write.mode("overwrite").format(fmt).save(dst_path)
-    import os as _os
+    import glob
+    import os
 
-    return sum(
-        1
-        for f in _os.listdir(dst_path)
-        if not f.startswith(("_", ".")) and f.endswith(fmt)
-    )
+    return len(glob.glob(os.path.join(dst_path, f"[!_]*{fmt}")))

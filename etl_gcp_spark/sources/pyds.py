@@ -221,20 +221,24 @@ def stream_chunk_ingest(spark, waves, root: str):
     ONLY the newly arrived chunks (asserted in tests). This is the
     reference's cron-shaped "poll the prefix, load what's new" loop
     (data_extractor.py:122-135) with the offset bookkeeping moved
-    into engine-managed checkpoints. Batch outputs land in
-    batch_id-keyed parquet subdirs (overwrite — replay-idempotent,
+    into engine-managed checkpoints. Each batch's output is one slice
+    of the ``root/out`` slice store (overwrite — replay-idempotent,
     the repo-wide streaming durability discipline).
 
     Returns the union of everything ingested.
     """
-    from etl_gcp_spark.streaming.staging import run_microbatches
+    from etl_gcp_spark.streaming.staging import (
+        read_slices,
+        run_microbatches,
+        write_slice,
+    )
 
     in_dir = os.path.join(root, "in")
     out_dir = os.path.join(root, "out")
     spark.dataSource.register(ChunkedCsvDataSource)
 
     def sink(df, bid):
-        df.write.mode("overwrite").parquet(os.path.join(out_dir, f"b{bid}"))
+        write_slice(df, out_dir, bid)
 
     start_idx = 0
     schema = None
@@ -250,4 +254,4 @@ def stream_chunk_ingest(spark, waves, root: str):
             .load()
         )
         run_microbatches(sdf, root, sink)
-    return spark.read.parquet(os.path.join(out_dir, "b*"))
+    return read_slices(spark, out_dir).drop("batch")

@@ -19,6 +19,7 @@ Reference surface covered (SURVEY.md §2.1):
 
 from __future__ import annotations
 
+import glob
 import io
 import os
 import time
@@ -59,11 +60,7 @@ def _nanos_timestamp_cols(path: str) -> list[str]:
         ]
 
     if os.path.isdir(path):
-        parts = [
-            os.path.join(path, f)
-            for f in sorted(os.listdir(path))
-            if f.endswith(".parquet")
-        ]
+        parts = sorted(glob.glob(os.path.join(path, "*.parquet")))
         if not parts:
             return []
         # check EVERY footer, not just the first: a directory mixing

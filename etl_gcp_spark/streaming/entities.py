@@ -10,11 +10,15 @@ the union of all records — "stream and batch agree exactly", so the
 batch entry's value-hash oracle attaches to the streamed result
 verbatim.
 
-Per microbatch, O(|batch| + touched components) WRITES:
+Layout: ``labels_base``, ``maskkeys/base`` and ``pairs`` are plain
+parquet trees; ``labels``, ``maskkeys/appends`` and ``tombstones``
+are slice stores (:mod:`~etl_gcp_spark.streaming.staging`), one
+batch_id-keyed slice per microbatch. Per microbatch, O(|batch| +
+touched components) WRITES:
 
-1. the batch's d=1 mask-key blocking rows land under
-   ``maskkeys/appends/batch=<id>`` (OVERWRITE — replay-idempotent;
-   the existing index files are never rewritten);
+1. the batch's d=1 mask-key blocking rows land as its
+   ``maskkeys/appends`` slice (OVERWRITE — replay-idempotent; the
+   existing index files are never rewritten);
 2. new edges come from probing the persisted index with the batch's
    keys only (batch↔base and batch↔earlier-batch; earlier pairs are
    already closed);
@@ -22,13 +26,13 @@ Per microbatch, O(|batch| + touched components) WRITES:
    to their current labels, so the iterative closure touches
    |batch| + affected components supernodes, never the full vertex
    set;
-4. a label PATCH (changed rows + the batch's own rows) lands under
-   ``labels/batch=<id>`` (OVERWRITE).
+4. a label PATCH (changed rows + the batch's own rows) lands as its
+   ``labels`` slice (OVERWRITE).
 
-Crash-replay correctness: state reads inside a microbatch filter
-``batch < batch_id`` — a replayed batch recomputes its patch from
-exactly the pre-batch state, so a half-committed previous attempt
-(its own ``batch=<id>`` dirs) is overwritten with identical content
+Crash-replay correctness: state reads inside a microbatch take only
+slices before ``batch_id`` — a replayed batch recomputes its patch
+from exactly the pre-batch state, so a half-committed previous
+attempt (its own slices) is overwritten with identical content
 instead of being folded into the input (which would shrink the
 replayed patch and lose relabels).
 """
@@ -42,10 +46,13 @@ from pyspark.sql import functions as F
 
 from etl_gcp_spark.metering import timed as _timed_phase
 from etl_gcp_spark.streaming.staging import (
+    read_slices,
     run_microbatches,
     scratch_root,
+    slice_ids,
     staged_ready,
     staged_stream,
+    write_slice,
 )
 
 _metered_build = _timed_phase("build")
@@ -59,22 +66,14 @@ def _latest_labels(spark: SparkSession, root: str, max_batch=None) -> DataFrame:
     patches committed BEFORE a given microbatch — the replay-safe
     read. The per-id window is bounded by the number of microbatches
     that ever touched the id."""
-    base = spark.read.parquet(os.path.join(root, "labels_base")).select(
+    frames = spark.read.parquet(os.path.join(root, "labels_base")).select(
         "id", "lbl", F.lit(-1).cast("long").alias("batch")
     )
-    patch_dir = os.path.join(root, "labels")
-    frames = base
-    if os.path.isdir(patch_dir) and any(
-        e.startswith("batch=") for e in os.listdir(patch_dir)
-    ):
-        patches = (
-            spark.read.option("basePath", patch_dir)
-            .parquet(patch_dir)
-            .select("id", "lbl", F.col("batch").cast("long"))
+    patches = read_slices(spark, os.path.join(root, "labels"), max_batch)
+    if patches is not None:
+        frames = frames.unionByName(
+            patches.select("id", "lbl", F.col("batch").cast("long"))
         )
-        if max_batch is not None:
-            patches = patches.filter(F.col("batch") < max_batch)
-        frames = frames.unionByName(patches)
     w = Window.partitionBy("id").orderBy(F.col("batch").desc())
     return (
         frames.withColumn("__rn", F.row_number().over(w))
@@ -95,16 +94,9 @@ def serve_entity_labels(spark: SparkSession, root: str) -> DataFrame:
     between compactions — the same serve discipline as the IVF and
     text index tombstones), and sizes recount over the survivors."""
     final = _latest_labels(spark, root)
-    tomb_dir = os.path.join(root, "tombstones")
-    if os.path.isdir(tomb_dir) and any(
-        e.startswith("batch=") for e in os.listdir(tomb_dir)
-    ):
-        tombs = (
-            spark.read.option("basePath", tomb_dir)
-            .parquet(tomb_dir)
-            .select("id")
-        )
-        final = final.join(F.broadcast(tombs), "id", "left_anti")
+    tombs = read_slices(spark, os.path.join(root, "tombstones"))
+    if tombs is not None:
+        final = final.join(F.broadcast(tombs.select("id")), "id", "left_anti")
     return final.select(
         F.col("id").alias("c_custkey"),
         F.col("lbl").alias("entity_id"),
@@ -124,7 +116,7 @@ def entity_labels_compact(spark: SparkSession, root: str) -> None:
     deployment commits the same swap through a manifest):
 
     1. ``labels_base`` ← latest label per id over base ∪ all
-       ``labels/batch=<id>`` patches, then the patch dir is dropped.
+       ``labels`` patch slices, then the patch store is dropped.
        This re-bounds the serve path's per-id window (base + one row
        per touching batch) back to exactly one row per id — after a
        long streaming run, compaction is what keeps serve cost
@@ -164,33 +156,21 @@ def entity_labels_compact(spark: SparkSession, root: str) -> None:
     heal_swap(mk_base)
     heal_swap(pairs_dir)
 
-    def _slices(d: str) -> bool:
-        return os.path.isdir(d) and any(
-            e.startswith("batch=") for e in os.listdir(d)
-        )
-
-    tombs = (
-        spark.read.option("basePath", tomb_dir)
-        .parquet(tomb_dir)
-        .select("id")
-        if _slices(tomb_dir)
-        else None
-    )
-    if _slices(patch_dir) or tombs is not None:
+    tombs = read_slices(spark, tomb_dir)
+    if tombs is not None:
+        tombs = tombs.select("id")
+    if slice_ids(patch_dir) or tombs is not None:
         latest = _latest_labels(spark, root)
         if tombs is not None:
             latest = latest.join(F.broadcast(tombs), "id", "left_anti")
         latest.write.mode("overwrite").parquet(base_dir + "_compacting")
         commit_swap(base_dir)
         shutil.rmtree(patch_dir, ignore_errors=True)
-    if os.path.isdir(mk_base) and (_slices(mk_app) or tombs is not None):
+    mk_slices = read_slices(spark, mk_app)
+    if os.path.isdir(mk_base) and (mk_slices is not None or tombs is not None):
         merged = spark.read.parquet(mk_base)
-        if _slices(mk_app):
-            merged = merged.unionByName(
-                spark.read.option("basePath", mk_app)
-                .parquet(mk_app)
-                .drop("batch")
-            )
+        if mk_slices is not None:
+            merged = merged.unionByName(mk_slices.drop("batch"))
         if tombs is not None:
             # the blocking index is keyed by the caller's id column
             # (mask_key_index keeps its name); every OTHER column is
@@ -266,9 +246,9 @@ def run_streaming_entity_ingest(
 
     Layout: ``root/labels_base`` + ``root/maskkeys/base`` are the
     trained base (idempotent overwrite — a resumed run rebuilds the
-    identical artifacts); each microbatch writes
-    ``root/maskkeys/appends/batch=<id>`` and ``root/labels/batch=<id>``
-    in overwrite mode. Pass ``root`` to resume a crashed run from its
+    identical artifacts); each microbatch writes its slice of the
+    ``root/maskkeys/appends`` and ``root/labels`` stores in overwrite
+    mode. Pass ``root`` to resume a crashed run from its
     checkpoint; ``fail_after_batches`` injects a post-write
     pre-commit crash (recovery tests).
     """
@@ -304,24 +284,15 @@ def run_streaming_entity_ingest(
 
     def ingest(batch_df, batch_id):
         keys = mask_key_index(batch_df, "c_custkey", "c_name")
-        keys.write.mode("overwrite").parquet(
-            os.path.join(appends, f"batch={batch_id}")
-        )
+        write_slice(keys, appends, batch_id)
         # probe the persisted index (base + appends up to and
         # including this batch's just-written keys — a crashed
         # attempt's identical leftovers are safely re-read)
-        idx = spark.read.parquet(os.path.join(root, "maskkeys", "base"))
-        if any(
-            e.startswith("batch=")
-            for e in os.listdir(appends)
-        ):
-            app = (
-                spark.read.option("basePath", appends)
-                .parquet(appends)
-                .filter(F.col("batch") <= batch_id)
-                .drop("batch")
-            )
-            idx = idx.unionByName(app)
+        idx = spark.read.parquet(
+            os.path.join(root, "maskkeys", "base")
+        ).unionByName(
+            read_slices(spark, appends, before=batch_id + 1).drop("batch")
+        )
         edges = probe_new_edges(keys, idx, "c_custkey")
         # pre-batch state ONLY (batch < batch_id): a replay must not
         # fold its own half-committed patch into the input
@@ -358,9 +329,7 @@ def run_streaming_entity_ingest(
             )
             .dropDuplicates(["id"])
         )
-        patch.write.mode("overwrite").parquet(
-            os.path.join(root, "labels", f"batch={batch_id}")
-        )
+        write_slice(patch, os.path.join(root, "labels"), batch_id)
 
     run_microbatches(
         staged_stream(spark, root, RECORDS_SCHEMA), root, ingest,
@@ -398,9 +367,9 @@ def run_streaming_entity_erasure(
        themselves over the persisted MATCH STORE filtered to
        survivors (deletion cannot create edges, so the stored pair
        set is complete — no re-blocking, ever);
-    3. the batch writes TWO slices in overwrite mode:
-       ``tombstones/batch=<id>`` (the erased ids) and
-       ``labels/batch=<id>`` (the re-closed survivors' new labels).
+    3. the batch writes TWO slices in overwrite mode: its
+       ``tombstones`` slice (the erased ids) and its ``labels`` slice
+       (the re-closed survivors' new labels).
 
     Per-batch work is O(|batch| + touched components), and because
     each batch transforms "labels == entity_clusters(survivors so
@@ -408,8 +377,8 @@ def run_streaming_entity_erasure(
     equals one batch clustering of all survivors — the batch
     closure oracle attaches with the survivor filter.
 
-    Crash-replay: state reads filter ``batch < batch_id`` (both the
-    label patches and prior tombstone slices), so a replayed batch
+    Crash-replay: state reads take only slices before ``batch_id``
+    (both the label patches and prior tombstone slices), so a replayed batch
     recomputes its slices from exactly the pre-batch state and the
     overwrites absorb the replay. The base build (match store +
     labels) is idempotent-overwrite; tombstones live OUTSIDE the
@@ -451,15 +420,9 @@ def run_streaming_entity_erasure(
         # pre-batch state: label patches AND tombstone slices from
         # strictly earlier batches only — replay-safe
         cur = _latest_labels(spark, root, max_batch=batch_id)
-        if os.path.isdir(tomb_dir) and any(
-            e.startswith("batch=") for e in os.listdir(tomb_dir)
-        ):
-            prior = (
-                spark.read.option("basePath", tomb_dir)
-                .parquet(tomb_dir)
-                .filter(F.col("batch") < batch_id)
-                .select("id")
-            )
+        prior = read_slices(spark, tomb_dir, before=batch_id)
+        if prior is not None:
+            prior = prior.select("id")
             cur = cur.join(F.broadcast(prior), "id", "left_anti")
             gone = prior.unionByName(erased)
         else:
@@ -492,14 +455,14 @@ def run_streaming_entity_erasure(
         re_ec = cluster_labels(
             touched_records, touched_pairs, "c_custkey", prefix="entity"
         )
-        re_ec.select(
-            F.col("c_custkey").alias("id"), F.col("entity_id").alias("lbl")
-        ).write.mode("overwrite").parquet(
-            os.path.join(root, "labels", f"batch={batch_id}")
+        write_slice(
+            re_ec.select(
+                F.col("c_custkey").alias("id"),
+                F.col("entity_id").alias("lbl"),
+            ),
+            os.path.join(root, "labels"), batch_id,
         )
-        erased.write.mode("overwrite").parquet(
-            os.path.join(tomb_dir, f"batch={batch_id}")
-        )
+        write_slice(erased, tomb_dir, batch_id)
 
     run_microbatches(
         staged_stream(spark, root, "id long"), root, ingest,

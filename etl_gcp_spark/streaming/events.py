@@ -31,11 +31,15 @@ from pyspark.sql import functions as F
 from etl_gcp_spark.streaming.staging import (
     PINNED_CONF,
     child_session,
+    drop_slices,
+    read_slices,
     run_microbatches,
     scratch_root,
+    slice_ids,
     stage_ordered_ranges,
     staged_ready,
     staged_stream,
+    write_slice,
 )
 
 EVENTS_SCHEMA = (
@@ -375,10 +379,10 @@ def run_streaming_upsert(
     touched partitions rewrite.
 
     CRASH RECOVERY is real, not happy-path: snapshot versions are
-    keyed by the engine's batch_id (``v{batch_id}``, written with
-    overwrite), and each merge reads its predecessor by scanning the
-    version dirs ON DISK for the largest id < batch_id — no Python
-    state survives a restart, so none is relied on. A batch replayed
+    slices of the ``root/versions`` store keyed by the engine's
+    batch_id, and each merge reads its predecessor, the largest slice
+    id < batch_id, from the store ON DISK — no Python state survives a
+    restart, so none is relied on. A batch replayed
     after a crash between sink write and checkpoint commit rewrites
     its own version idempotently from the same predecessor — the
     standard foreachBatch exactly-once recipe. Pass ``root`` to
@@ -404,16 +408,7 @@ def run_streaming_upsert(
         ).parquet(staged)
 
     recency = lambda: [F.col("ts").desc(), F.col("event_id").desc()]  # noqa: E731
-
-    def versions() -> dict[int, str]:
-        try:
-            return {
-                int(d[1:]): os.path.join(root, d)
-                for d in os.listdir(root)
-                if d.startswith("v") and d[1:].isdigit()
-            }
-        except FileNotFoundError:
-            return {}
+    versions = os.path.join(root, "versions")
 
     def merge(batch_df, batch_id):
         w = Window.partitionBy("user_id").orderBy(*recency())
@@ -422,31 +417,30 @@ def run_streaming_upsert(
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        prior = {v: p for v, p in versions().items() if v < batch_id}
+        prior = [v for v in slice_ids(versions) if v < batch_id]
         if not prior:
             merged = latest
         else:
-            prev = batch_df.sparkSession.read.parquet(prior[max(prior)])
+            prev = (
+                read_slices(batch_df.sparkSession, versions, before=batch_id)
+                .filter(F.col("batch") == prior[-1])
+                .drop("batch")
+            )
             merged = cdc_upsert(prev, latest, ["user_id"], order_by=recency())
-        merged.write.mode("overwrite").parquet(
-            os.path.join(root, f"v{batch_id}")
-        )
+        write_slice(merged, versions, batch_id)
 
     run_microbatches(
         staged_stream(spark, root, EVENTS_SCHEMA), root, merge,
         fail_after_batches,
     )
-    final = versions()
     # retention: predecessor versions exist only for crash recovery
     # (a replayed batch rereads version < batch_id). Once the stream
     # COMPLETES they are dead weight — at one snapshot per trigger a
     # continuous ingest would otherwise accumulate the full history.
     # Never pruned mid-run, so a crash before this point keeps every
     # version a resumed run could need.
-    for v, p in final.items():
-        if v != max(final):
-            shutil.rmtree(p, ignore_errors=True)
-    return spark.read.parquet(final[max(final)]).select(
+    drop_slices(versions, before=slice_ids(versions)[-1])
+    return read_slices(spark, versions).select(
         "user_id",
         F.col("event_id").alias("last_event_id"),
         F.col("ts").alias("last_ts"),
@@ -523,11 +517,13 @@ def run_streaming_minhash_dedup(
     index (dropped docs still block later copies of themselves —
     same semantics as the batch greedy rule).
 
-    CRASH RECOVERY is real, not happy-path: survivors and both index
-    tables are written under per-batch subdirectories keyed by the
-    engine's batch_id (overwrite mode), and "has the index seen
+    Layout: survivors and both index tables are slice stores
+    (``root/kept``, ``root/index_docs``, ``root/index_banded``; see
+    :mod:`~etl_gcp_spark.streaming.staging`), one slice per batch_id.
+
+    CRASH RECOVERY is real, not happy-path: "has the index seen
     anything yet" / "which index slices precede this batch" are
-    answered by LISTING THOSE DIRS, filtered to ids < batch_id — no
+    answered by reading the stores' slices with ids < batch_id — no
     Python state survives a restart, so none is relied on. A batch
     replayed after a crash between sink writes and checkpoint commit
     rewrites exactly its own subdirs from exactly its predecessors —
@@ -553,18 +549,6 @@ def run_streaming_minhash_dedup(
     out_dir = os.path.join(root, "kept")
     docs_dir = os.path.join(root, "index_docs")
     banded_dir = os.path.join(root, "index_banded")
-
-    def _slices(parent: str, before: int) -> list[str]:
-        """Index slices from batches strictly before ``before``."""
-        try:
-            return [
-                os.path.join(parent, d)
-                for d in os.listdir(parent)
-                if d.startswith("b") and d[1:].isdigit()
-                and int(d[1:]) < before
-            ]
-        except FileNotFoundError:
-            return []
 
     def merge(batch_df, batch_id):
         # the batch is banded and shingled ONCE and pinned; internal
@@ -592,14 +576,14 @@ def run_streaming_minhash_dedup(
             internal_cand, sh_b, sh_b,
             threshold=threshold, left_col="id1", right_col="id2",
         ).select(F.col("id2").alias("doc_id"))
-        prior_banded = _slices(banded_dir, batch_id)
-        if not prior_banded:
+        prior_banded = read_slices(sess, banded_dir, before=batch_id)
+        if prior_banded is None:
             dropped = internal
         else:
             cand = (
                 bb.select("band", "bkey", F.col("doc_id").alias("batch_id"))
                 .join(
-                    sess.read.parquet(*prior_banded).select(
+                    prior_banded.select(
                         "band", "bkey", F.col("doc_id").alias("corpus_id")
                     ),
                     ["band", "bkey"],
@@ -607,9 +591,9 @@ def run_streaming_minhash_dedup(
                 .select("batch_id", "corpus_id")
                 .dropDuplicates()
             )
-            cand_corpus = sess.read.parquet(
-                *_slices(docs_dir, batch_id)
-            ).join(
+            cand_corpus = read_slices(
+                sess, docs_dir, before=batch_id
+            ).drop("batch").join(
                 cand.select(F.col("corpus_id").alias("doc_id"))
                 .dropDuplicates(),
                 "doc_id",
@@ -620,18 +604,18 @@ def run_streaming_minhash_dedup(
                 left_col="batch_id", right_col="corpus_id",
             ).select(F.col("batch_id").alias("doc_id"))
             dropped = internal.union(cross)
-        # per-batch subdir writes (overwrite): replay-idempotent. The
+        # per-batch slice writes (overwrite): replay-idempotent. The
         # survivor write is the ACTION that fully consumes the lazy
         # index reads above — only then is the batch's index slice
         # written. Index maintenance stays O(batch) per trigger
         # (rewriting index ∪ batch was O(corpus) I/O per batch —
         # quadratic across a day of triggers).
-        sub = f"b{batch_id}"
-        batch.join(
-            dropped.dropDuplicates(), "doc_id", "left_anti"
-        ).write.mode("overwrite").parquet(os.path.join(out_dir, sub))
-        batch.write.mode("overwrite").parquet(os.path.join(docs_dir, sub))
-        bb.write.mode("overwrite").parquet(os.path.join(banded_dir, sub))
+        write_slice(
+            batch.join(dropped.dropDuplicates(), "doc_id", "left_anti"),
+            out_dir, batch_id,
+        )
+        write_slice(batch, docs_dir, batch_id)
+        write_slice(bb, banded_dir, batch_id)
         sh_b.unpersist()
         bb.unpersist()
         batch.unpersist()
@@ -645,7 +629,7 @@ def run_streaming_minhash_dedup(
         ),
         root, merge, fail_after_batches,
     )
-    return spark.read.parquet(os.path.join(out_dir, "b*"))
+    return read_slices(spark, out_dir).drop("batch")
 
 
 def run_streaming_cms(
@@ -698,14 +682,13 @@ def run_streaming_cms(
     sketch_dir = os.path.join(root, "sketch")
 
     def fold(batch_df, batch_id):
-        # per-batch subdir keyed by batch_id, overwrite mode: a batch
-        # replayed after a crash between write and checkpoint commit
-        # rewrites ITS OWN partial instead of double-counting it —
-        # CMS merge-by-addition is only exactly-once if each batch's
-        # counters land exactly once
-        cms_build(batch_df, key_col, width=width).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(sketch_dir, f"b{batch_id}"))
+        # one slice per batch_id: a batch replayed after a crash
+        # between write and checkpoint commit rewrites ITS OWN partial
+        # instead of double-counting it — CMS merge-by-addition is
+        # only exactly-once if each batch's counters land exactly once
+        write_slice(
+            cms_build(batch_df, key_col, width=width), sketch_dir, batch_id
+        )
 
     run_microbatches(
         staged_stream(
@@ -715,7 +698,7 @@ def run_streaming_cms(
     )
 
     merged = (
-        spark.read.parquet(os.path.join(sketch_dir, "b*"))
+        read_slices(spark, sketch_dir)
         .groupBy("row", "bucket")
         .agg(F.sum("cnt").alias("cnt"))
     )
@@ -767,12 +750,11 @@ def run_streaming_topk(
     counts_dir = os.path.join(root, "counts")
 
     def fold(batch_df, batch_id):
-        # batch_id-keyed overwrite: replay-idempotent (see
+        # batch_id-keyed slice: replay-idempotent (see
         # run_streaming_cms — additive merges double-count otherwise)
-        batch_df.groupBy(key_col).agg(
-            F.count(F.lit(1)).alias("cnt")
-        ).write.mode("overwrite").parquet(
-            os.path.join(counts_dir, f"b{batch_id}")
+        write_slice(
+            batch_df.groupBy(key_col).agg(F.count(F.lit(1)).alias("cnt")),
+            counts_dir, batch_id,
         )
 
     run_microbatches(
@@ -784,7 +766,7 @@ def run_streaming_topk(
         root, fold, fail_after_batches,
     )
     return (
-        spark.read.parquet(os.path.join(counts_dir, "b*"))
+        read_slices(spark, counts_dir)
         .groupBy(key_col)
         .agg(F.sum("cnt").alias("n_events"))
         .orderBy(F.col("n_events").desc(), F.col(key_col))
@@ -824,7 +806,7 @@ def run_streaming_quantiles(
     :func:`~etl_gcp_spark.functions.sketches.quantiles_from_bins`).
 
     Durability discipline: per-batch partials land in batch_id-keyed
-    subdirs in OVERWRITE mode — a batch replayed after a crash
+    slices in OVERWRITE mode — a batch replayed after a crash
     between sink write and checkpoint commit rewrites its own partial
     instead of double-counting it (``fail_after_batches`` injects
     exactly that crash for the kill-resume test; pass the same
@@ -851,12 +833,11 @@ def run_streaming_quantiles(
     bins_dir = os.path.join(root, "bins")
 
     def fold(batch_df, batch_id):
-        # batch_id-keyed overwrite: replay-idempotent (see
+        # batch_id-keyed slice: replay-idempotent (see
         # run_streaming_cms — additive merges double-count otherwise)
-        histogram_bins(
-            batch_df, value_col, lo=lo, hi=hi, n_bins=n_bins
-        ).write.mode("overwrite").parquet(
-            os.path.join(bins_dir, f"b{batch_id}")
+        write_slice(
+            histogram_bins(batch_df, value_col, lo=lo, hi=hi, n_bins=n_bins),
+            bins_dir, batch_id,
         )
 
     run_microbatches(
@@ -868,7 +849,7 @@ def run_streaming_quantiles(
         root, fold, fail_after_batches,
     )
     return quantiles_from_bins(
-        spark.read.parquet(os.path.join(bins_dir, "b*")),
+        read_slices(spark, bins_dir),
         lo=lo,
         hi=hi,
         n_bins=n_bins,
@@ -928,10 +909,11 @@ def run_streaming_hll(
     regs_dir = os.path.join(root, "regs")
 
     def fold(batch_df, batch_id):
-        hll_registers(batch_df, key_col, group_col).groupBy(
-            "grp", "idx"
-        ).agg(F.max("rho").alias("rho")).write.mode("overwrite").parquet(
-            os.path.join(regs_dir, f"b{batch_id}")
+        write_slice(
+            hll_registers(batch_df, key_col, group_col)
+            .groupBy("grp", "idx")
+            .agg(F.max("rho").alias("rho")),
+            regs_dir, batch_id,
         )
 
     run_microbatches(
@@ -943,7 +925,7 @@ def run_streaming_hll(
         root, fold, fail_after_batches,
     )
     merged = (
-        spark.read.parquet(os.path.join(regs_dir, "b*"))
+        read_slices(spark, regs_dir)
         .groupBy("grp", "idx")
         .agg(F.max("rho").alias("rho"))
     )
@@ -980,9 +962,9 @@ def run_streaming_markov(
     - within-batch transitions via the same (ts, event_id) lag window
       as the batch operator;
     - boundary transitions by joining the predecessor state (latest
-      event per user across all state slices with id < batch_id —
-      discovered by listing, exactly like the near-dup index) to each
-      user's FIRST in-batch event;
+      event per user across all state slices with id < batch_id, read
+      from the slice store like the near-dup index) to each user's
+      FIRST in-batch event;
     - new state slice = latest in-batch event per user.
 
     Because the stage partitioner cuts on EVENT TIME (every event in
@@ -1030,14 +1012,8 @@ def run_streaming_markov(
     def fold(batch_df, batch_id):
         from pyspark.sql import Window as W
 
-        prev_slices = (
-            sorted(
-                d
-                for d in os.listdir(state_dir)
-                if d.startswith("b") and int(d[1:]) < batch_id
-            )
-            if os.path.isdir(state_dir)
-            else []
+        prev_state = read_slices(
+            batch_df.sparkSession, state_dir, before=batch_id
         )
         w = W.partitionBy("user_id").orderBy("us", "event_id")
         within = (
@@ -1052,26 +1028,21 @@ def run_streaming_markov(
             .filter(F.col("__rn") == 1)
             .select("user_id", F.col("event_type").alias("cur_type"))
         )
-        if prev_slices:
-            prev_state = _latest_per_user(
-                batch_df.sparkSession.read.parquet(
-                    *[os.path.join(state_dir, d) for d in prev_slices]
-                )
-            ).select(
+        if prev_state is not None:
+            prev_state = _latest_per_user(prev_state).select(
                 "user_id", F.col("event_type").alias("prev_type")
             )
             boundary = prev_state.join(firsts, "user_id").select(
                 "prev_type", F.col("cur_type").alias("event_type")
             )
             within = within.unionByName(boundary)
-        within.groupBy("prev_type", "event_type").agg(
-            F.count(F.lit(1)).alias("n")
-        ).write.mode("overwrite").parquet(
-            os.path.join(counts_dir, f"b{batch_id}")
+        write_slice(
+            within.groupBy("prev_type", "event_type").agg(
+                F.count(F.lit(1)).alias("n")
+            ),
+            counts_dir, batch_id,
         )
-        _latest_per_user(batch_df).write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"b{batch_id}")
-        )
+        write_slice(_latest_per_user(batch_df), state_dir, batch_id)
 
     run_microbatches(
         staged_stream(
@@ -1082,7 +1053,7 @@ def run_streaming_markov(
         root, fold, fail_after_batches,
     )
     merged = (
-        spark.read.parquet(os.path.join(counts_dir, "b*"))
+        read_slices(spark, counts_dir)
         .groupBy("prev_type", "event_type")
         .agg(F.sum("n").alias("n_transitions"))
     )

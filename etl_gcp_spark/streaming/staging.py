@@ -1,5 +1,6 @@
-"""The shared edges of every streaming runner: staging, the microbatch
-runner, and the child session a pinned query runs on.
+"""The shared edges of every streaming runner, and the one on-disk
+layout for batch-keyed state: staging, the microbatch runner, the
+child session a pinned query runs on, and the slice store.
 
 Each ``run_streaming_*`` keeps only its staging and its per-batch
 body. The plan is the same as in batch; only the ``readStream`` /
@@ -17,6 +18,23 @@ body. The plan is the same as in batch; only the ``readStream`` /
   partition count, the nanos reader flag) without writing the
   caller's session.
 
+The slice store: every batch-keyed artifact (streamed sketch
+partials, index append trees, label patches, tombstones, snapshot
+versions) is a directory ``store`` of slices ``store/batch=<id>``.
+:func:`write_slice` overwrites one slice, so a batch replayed after a
+crash rewrites exactly its own; :func:`slice_ids` lists them;
+:func:`read_slices` reads the slices below ``before`` (the replay-safe
+read of a batch's predecessors) with a ``batch`` column. The schema is
+recorded in ``store/_schema.json`` before the data lands and every
+read pins it, so no read runs a schema-inference job (Spark's listing
+skips ``_`` files). Slice :data:`REQUEST_SLICE` (``-1``) belongs to the
+request path (``ivf_index_erase``, ``text_index_erase``): writes to it
+append, since a request is never replayed, and a streamed batch id is
+never negative, so a stream never overwrites it and every ``before=``
+read includes it. How slices fold (latest label per id, base row wins
+on ``vec_id``, counter sums) stays with each family. Finished stores
+fold through :func:`commit_swap` / :func:`heal_swap`.
+
 Staging completion: a bare ``os.path.exists(dir)`` guard is NOT
 crash-atomic: the directory exists from the moment the write starts,
 so a run killed mid-staging would resume against a partial (or empty)
@@ -28,7 +46,9 @@ incomplete leftovers are simply overwritten.
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import tempfile
 import threading
 import uuid
@@ -108,10 +128,10 @@ def run_microbatches(
     (``availableNow``), checkpointing under ``root/ckpt``; passing the
     same ``root`` again resumes from the last committed batch.
 
-    Exactly-once contract for bodies: write only batch_id-keyed
-    outputs in overwrite mode, and read state from slices with an id
-    below ``batch_id``, so a batch replayed after a crash rewrites its
-    own outputs from the same predecessors.
+    Exactly-once contract for bodies: write state only through
+    :func:`write_slice` under ``batch_id``, and read it through
+    :func:`read_slices` with ``before=batch_id``, so a batch replayed
+    after a crash rewrites its own slices from the same predecessors.
     ``fail_after_batches`` injects that crash: after the body's writes
     of the N-th batch of this run, before the checkpoint commit — the
     point the engine must replay from (recovery tests)."""
@@ -255,3 +275,67 @@ def commit_swap(base: str) -> None:
     os.rename(base, old)
     os.rename(tmp, base)
     shutil.rmtree(old, ignore_errors=True)
+
+
+# the slice the request path appends to; see the module docstring
+REQUEST_SLICE = -1
+_SCHEMA = "_schema.json"
+
+
+def _slice_dir(store: str, batch_id: int) -> str:
+    return os.path.join(store, f"batch={batch_id}")
+
+
+def write_slice(df, store: str, batch_id: int, partition_by=()) -> None:
+    """Write ``df`` as slice ``batch_id`` of ``store`` (overwrite, or
+    append for :data:`REQUEST_SLICE`), partitioned by ``partition_by``
+    inside the slice. The schema sidecar is replaced first, so every
+    slice on disk has its schema recorded."""
+    os.makedirs(store, exist_ok=True)
+    tmp = os.path.join(store, f"{_SCHEMA}.{uuid.uuid4().hex}")
+    with open(tmp, "w") as fh:
+        fh.write(df.schema.json())
+    os.replace(tmp, os.path.join(store, _SCHEMA))
+    mode = "append" if batch_id == REQUEST_SLICE else "overwrite"
+    df.write.mode(mode).partitionBy(*partition_by).parquet(
+        _slice_dir(store, batch_id)
+    )
+
+
+def slice_ids(store: str) -> list[int]:
+    """The sorted slice ids of ``store``; ``[]`` when it is missing."""
+    try:
+        names = os.listdir(store)
+    except FileNotFoundError:
+        return []
+    found = (re.fullmatch(r"batch=(-?\d+)", n) for n in names)
+    return sorted(int(m[1]) for m in found if m)
+
+
+def read_slices(spark, store: str, before: int | None = None):
+    """The slices of ``store`` with an id below ``before`` (all when
+    None; :data:`REQUEST_SLICE` is below every batch id) as one frame
+    with an int ``batch`` column, or None when there are none. Reads
+    by explicit slice path with the recorded schema: no inference job,
+    and partition filters on ``partition_by`` columns still prune."""
+    from pyspark.sql import types as T
+
+    ids = [i for i in slice_ids(store) if before is None or i < before]
+    if not ids:
+        return None
+    with open(os.path.join(store, _SCHEMA)) as fh:
+        schema = T.StructType.fromJson(json.load(fh))
+    return (
+        spark.read.schema(schema.add("batch", T.IntegerType()))
+        .option("basePath", store)
+        .parquet(*[_slice_dir(store, i) for i in ids])
+    )
+
+
+def drop_slices(store: str, before: int) -> None:
+    """Remove the slices of ``store`` with an id below ``before``."""
+    import shutil
+
+    for i in slice_ids(store):
+        if i < before:
+            shutil.rmtree(_slice_dir(store, i), ignore_errors=True)

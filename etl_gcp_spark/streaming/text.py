@@ -8,9 +8,10 @@ holds throughout.
 
 Replay-idempotency: the batch :func:`text_index_append` writes
 postings in APPEND mode, which a foreachBatch replay would duplicate.
-Streamed appends therefore land under ``batch=<batch_id>`` directories
-in OVERWRITE mode — a replayed microbatch rewrites its own directory
-and nothing else (the same discipline as the IVF append trees).
+Streamed appends therefore land as batch_id-keyed slices of slice
+stores (:mod:`~etl_gcp_spark.streaming.staging`) in OVERWRITE mode —
+a replayed microbatch rewrites its own slice and nothing else (the
+same discipline as the IVF append trees).
 """
 
 from __future__ import annotations
@@ -22,10 +23,12 @@ from pyspark.sql import functions as F
 
 from etl_gcp_spark.metering import timed as _timed_phase
 from etl_gcp_spark.streaming.staging import (
+    read_slices,
     run_microbatches,
     scratch_root,
     staged_ready,
     staged_stream,
+    write_slice,
 )
 
 _metered_build = _timed_phase("build")
@@ -62,14 +65,14 @@ def run_streaming_text_ingest(
     STREAMED result verbatim.
 
     Layout: ``root/index/{postings,doclen,stats}`` is the trained
-    base; each microbatch writes
-    ``root/index/appends/postings/batch=<id>/bucket=<b>/`` and
-    ``root/index/appends/doclen/batch=<id>/`` in overwrite mode
-    (replay-idempotent). Serving filters ``bucket`` on BOTH trees —
-    partition pruning holds for appends too (``batch`` adds files,
-    not read amplification). Pass ``root`` to resume a crashed run
-    from its checkpoint; ``fail_after_batches`` injects a post-write
-    pre-commit crash (recovery tests).
+    base; ``root/index/appends/{postings,doclen}`` are slice stores,
+    and each microbatch writes its slice of both in overwrite mode
+    (replay-idempotent), postings partitioned by bucket. Serving
+    filters ``bucket`` on BOTH trees — partition pruning holds for
+    appends too (``batch`` adds files, not read amplification). Pass
+    ``root`` to resume a crashed run from its checkpoint;
+    ``fail_after_batches`` injects a post-write pre-commit crash
+    (recovery tests).
     """
     from etl_gcp_spark.functions.text import (
         bm25_score_frames,
@@ -115,10 +118,9 @@ def run_streaming_text_ingest(
             .persist()
         )
         try:
-            posting.groupBy("doc_id").agg(
-                F.sum("tf").alias("dl")
-            ).write.mode("overwrite").parquet(
-                os.path.join(appends, "doclen", f"batch={batch_id}")
+            write_slice(
+                posting.groupBy("doc_id").agg(F.sum("tf").alias("dl")),
+                os.path.join(appends, "doclen"), batch_id,
             )
             # cluster by bucket before the partitioned write: the
             # persisted frame materializes at the static shuffle-
@@ -133,13 +135,10 @@ def run_streaming_text_ingest(
                 n_buckets,
                 posting.sparkSession.sparkContext.defaultParallelism,
             )
-            (
-                posting.repartition(n_part, "bucket")
-                .write.partitionBy("bucket")
-                .mode("overwrite")
-                .parquet(
-                    os.path.join(appends, "postings", f"batch={batch_id}")
-                )
+            write_slice(
+                posting.repartition(n_part, "bucket"),
+                os.path.join(appends, "postings"), batch_id,
+                partition_by=("bucket",),
             )
         finally:
             posting.unpersist()
@@ -152,28 +151,17 @@ def run_streaming_text_ingest(
     # serve over base ∪ appends with bucket pruning on both trees
     buckets = sorted({poly_hash_py(t) % n_buckets for t in query_terms})
     base_post = spark.read.parquet(os.path.join(index, "postings"))
-    app_post_dir = os.path.join(appends, "postings")
-    app_post = (
-        spark.read.option("basePath", app_post_dir)
-        .parquet(app_post_dir)
-        .drop("batch")
-    )
+    app_post = read_slices(spark, os.path.join(appends, "postings"))
     postings = (
-        base_post.unionByName(app_post)
+        base_post.unionByName(app_post.drop("batch"))
         .filter(F.col("bucket").isin(buckets))
         .filter(F.col("term").isin(query_terms))
         .select(
             "doc_id", F.col("term").alias("__t"), F.col("tf").alias("__tf")
         )
     )
-    app_dl_dir = os.path.join(appends, "doclen")
-    dl_all = (
-        spark.read.parquet(os.path.join(index, "doclen"))
-        .unionByName(
-            spark.read.option("basePath", app_dl_dir)
-            .parquet(app_dl_dir)
-            .drop("batch")
-        )
+    dl_all = spark.read.parquet(os.path.join(index, "doclen")).unionByName(
+        read_slices(spark, os.path.join(appends, "doclen")).drop("batch")
     )
     stats = dl_all.agg(
         F.count(F.lit(1)).alias("__n_docs"),
@@ -197,15 +185,14 @@ def run_streaming_text_erasure(
     fail_after_batches: int | None = None,
 ) -> DataFrame:
     """Deletion requests arrive as a STREAM: each microbatch of
-    doc_ids lands as a tombstone slice under
-    ``index/tombstones/batch=<batch_id>`` (OVERWRITE — a replayed
-    batch rewrites its own slice; the batch-path
-    ``text_index_erase``'s blind append would duplicate rows on
-    replay, which anti-join semantics would forgive but exactly-once
-    discipline should not rely on). Serving after the stream drains
-    goes through the ordinary tombstone-aware ``bm25_index_topk`` and
-    is bit-equal to a fused scorer over the surviving corpus — the
-    batch erasure entry's oracle attaches verbatim.
+    doc_ids lands as its slice of the ``index/tombstones`` store
+    (OVERWRITE — a replayed batch rewrites its own slice; the
+    request-path ``text_index_erase`` appends to the reserved slice
+    ``REQUEST_SLICE``, which no streamed batch overwrites). Serving
+    after the stream drains goes through the ordinary tombstone-aware
+    ``bm25_index_topk`` and is bit-equal to a fused scorer over the
+    surviving corpus — the batch erasure entry's oracle attaches
+    verbatim.
 
     The index build is guarded by its committer marker, NOT blindly
     rebuilt on resume: a rebuild clears the tombstone dir (fresh
@@ -233,8 +220,9 @@ def run_streaming_text_erasure(
         ).repartition(n_batches).write.mode("overwrite").parquet(staged)
 
     def ingest(batch_df, batch_id):
-        batch_df.select("doc_id").write.mode("overwrite").parquet(
-            os.path.join(index, "tombstones", f"batch={batch_id}")
+        write_slice(
+            batch_df.select("doc_id"),
+            os.path.join(index, "tombstones"), batch_id,
         )
 
     run_microbatches(
@@ -268,14 +256,15 @@ def run_streaming_decontamination(
     (doc_id, pos, gram — the n-gram posting, built ONCE). Each
     microbatch of benchmark documents then:
 
-    1. writes its distinct grams as ``root/benchgrams/batch=<id>``
-       (OVERWRITE — a replayed batch rewrites its own slice);
+    1. writes its distinct grams as its slice of the
+       ``root/benchgrams`` store (OVERWRITE — a replayed batch
+       rewrites its own slice);
     2. probes the posting with THIS batch's grams (broadcast — eval
        shards are small) for the affected doc set;
     3. recomputes the AFFECTED docs' absolute verdict against the
        union of gram slices ``batch <= batch_id`` (including its
        own, just written — the maskkeys-ingest discipline) and
-       writes it as ``root/verdicts/batch=<id>``.
+       writes it as its slice of the ``root/verdicts`` store.
 
     Per-batch work is O(|batch grams| + affected docs' tokens) —
     never a corpus pass. Serving takes each doc's LATEST verdict
@@ -346,14 +335,10 @@ def run_streaming_decontamination(
             .select(F.explode("shingles").alias("__gram"))
             .dropDuplicates()
         )
-        batch_grams.write.mode("overwrite").parquet(
-            os.path.join(bg_dir, f"batch={batch_id}")
-        )
+        write_slice(batch_grams, bg_dir, batch_id)
         # all shards so far, INCLUDING this one's just-written slice
         all_grams = (
-            spark.read.option("basePath", bg_dir)
-            .parquet(bg_dir)
-            .filter(F.col("batch") <= batch_id)
+            read_slices(spark, bg_dir, before=batch_id + 1)
             .select("__gram")
             .dropDuplicates()
         )
@@ -396,10 +381,11 @@ def run_streaming_decontamination(
             all_grams,
             n,
         )
-        apply_removal(
-            aff_toked.join(removed, "doc_id", "left"), max_removed_frac
-        ).write.mode("overwrite").parquet(
-            os.path.join(root, "verdicts", f"batch={batch_id}")
+        write_slice(
+            apply_removal(
+                aff_toked.join(removed, "doc_id", "left"), max_removed_frac
+            ),
+            os.path.join(root, "verdicts"), batch_id,
         )
 
     run_microbatches(
@@ -408,7 +394,6 @@ def run_streaming_decontamination(
     )
 
     corpus = spark.read.parquet(corpus_path)
-    v_dir = os.path.join(root, "verdicts")
     base = corpus.select(
         "doc_id",
         F.col("__nt").cast("long").alias("n_tokens"),
@@ -417,13 +402,10 @@ def run_streaming_decontamination(
         F.col("text").alias("clean_text"),
         F.lit(-1).cast("long").alias("batch"),
     )
-    if os.path.isdir(v_dir) and any(
-        e.startswith("batch=") for e in os.listdir(v_dir)
-    ):
-        patches = (
-            spark.read.option("basePath", v_dir)
-            .parquet(v_dir)
-            .select(
+    patches = read_slices(spark, os.path.join(root, "verdicts"))
+    if patches is not None:
+        base = base.unionByName(
+            patches.select(
                 "doc_id",
                 "n_tokens",
                 "n_removed",
@@ -432,7 +414,6 @@ def run_streaming_decontamination(
                 F.col("batch").cast("long"),
             )
         )
-        base = base.unionByName(patches)
     w = Window.partitionBy("doc_id").orderBy(F.col("batch").desc())
     return (
         base.withColumn("__r", F.row_number().over(w))

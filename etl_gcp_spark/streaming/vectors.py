@@ -9,10 +9,10 @@ files under an append tree — so a 100-TB vector corpus can keep
 serving while new vectors stream in, with retrain relegated to an
 offline rebuild when drift warrants it.
 
-Crash recovery follows the engine-batch_id discipline of
-``streaming/events.py`` (round-4 pattern): every batch writes its own
-``batch=<id>`` directory in overwrite mode, so a batch replayed after
-a crash between sink write and checkpoint commit rewrites itself
+Crash recovery follows the engine-batch_id discipline of the slice
+store (:mod:`~etl_gcp_spark.streaming.staging`): every batch writes
+its own slice in overwrite mode, so a batch replayed after a crash
+between sink write and checkpoint commit rewrites itself
 idempotently; no Python state survives a restart, so none is relied
 on. Batches are mutually independent (pure appends, no cross-batch
 merge), which makes this the simplest exactly-once shape of the four
@@ -31,10 +31,12 @@ from pyspark.sql import functions as F
 # serve latency is the tracked number (etl_gcp_spark/metering.py)
 from etl_gcp_spark.metering import timed as _timed_phase
 from etl_gcp_spark.streaming.staging import (
+    read_slices,
     run_microbatches,
     scratch_root,
     staged_ready,
     staged_stream,
+    write_slice,
 )
 
 _metered_build = _timed_phase("build")
@@ -74,9 +76,9 @@ def run_streaming_ivf_ingest(
     family holds throughout).
 
     Layout: ``root/index/vectors`` is the trained base (partitioned
-    by cell); each microbatch writes
-    ``root/index/appends/batch=<batch_id>/cell=<cell>/`` in overwrite
-    mode (replay-idempotent). Serving reads base and appends with the
+    by cell); ``root/index/appends`` is a slice store, and each
+    microbatch writes its slice partitioned by cell in overwrite mode
+    (replay-idempotent). Serving reads base and appends with the
     same ``cell IN probes`` partition-pruned scans — the ``batch``
     partition level adds files, not read amplification, and an
     offline compaction folding appends into the base tree is ordinary
@@ -127,13 +129,9 @@ def run_streaming_ivf_ingest(
             "vec_id", _as_double(F.col("embedding")).alias("__v")
         )
         assigned = _assign_to_centroids(base, cmat, labels, "vec_id")
-        (
-            assigned.select(
-                "vec_id", F.col("__v").alias("vector"), "cell"
-            )
-            .write.partitionBy("cell")
-            .mode("overwrite")
-            .parquet(os.path.join(appends, f"batch={batch_id}"))
+        write_slice(
+            assigned.select("vec_id", F.col("__v").alias("vector"), "cell"),
+            appends, batch_id, partition_by=("cell",),
         )
 
     run_microbatches(
@@ -151,11 +149,7 @@ def run_streaming_ivf_ingest(
         )
 
     base_vecs = spark.read.parquet(os.path.join(index, "vectors"))
-    appended = (
-        spark.read.option("basePath", appends)
-        .parquet(appends)
-        .select("vec_id", "vector", "cell")
-    )
+    appended = read_slices(spark, appends).select("vec_id", "vector", "cell")
     return ivf_serve(
         spark,
         cents,
@@ -182,9 +176,10 @@ def run_streaming_drift_report(
     each batch scores its members' best-centroid cosine against the
     FROZEN base-cohort centroids, and the per-batch state written is
     the exact integer compaction (cohort, sim6, count) — sim6 =
-    round(sim·1e6) as int64 — under a batch_id-keyed overwrite dir
-    (replay-idempotent). The final report aggregates the state to
-    the SAME per-cohort (n_vecs, mean_sim, p05_sim) the batch
+    round(sim·1e6) as int64 — as the batch's slice of the
+    ``root/state`` store (replay-idempotent). The final report
+    aggregates the state to the SAME per-cohort (n_vecs, mean_sim,
+    p05_sim) the batch
     :func:`~etl_gcp_spark.functions.similarity.ivf_drift_report`
     produces: the decimal mean is reconstructed exactly from
     Σ(sim6·count)/10⁶ (integer arithmetic all the way to one decimal
@@ -236,7 +231,7 @@ def run_streaming_drift_report(
         )
         sims = [_cos(F.col("__v"), list(cent)) for cent in cmat]
         best = sims[0] if len(sims) == 1 else F.greatest(*sims)
-        (
+        write_slice(
             allv.select(
                 F.when(
                     (F.col("vec_id") % holdout_mod) == holdout_mod - 1,
@@ -249,9 +244,8 @@ def run_streaming_drift_report(
                 .alias("sim6"),
             )
             .groupBy("cohort", "sim6")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(state, f"batch={batch_id}"))
+            .agg(F.count(F.lit(1)).alias("c")),
+            state, batch_id,
         )
 
     run_microbatches(
@@ -260,8 +254,7 @@ def run_streaming_drift_report(
     )
 
     g = (
-        spark.read.option("basePath", state)
-        .parquet(state)
+        read_slices(spark, state)
         .groupBy("cohort", "sim6")
         .agg(F.sum("c").alias("c"))
     )
@@ -314,11 +307,11 @@ def run_streaming_ivf_erasure(
     index — the vector twin of
     ``streaming/text.py::run_streaming_text_erasure``, closing the
     erasure family's streaming story on BOTH index sides: each
-    microbatch of vec_ids lands as a tombstone slice under
-    ``index/tombstones/batch=<batch_id>`` (OVERWRITE — a replayed
-    batch rewrites only its own slice; the batch-path
-    ``ivf_index_erase``'s blind append would duplicate rows on
-    replay). Serving after the stream drains goes through the
+    microbatch of vec_ids lands as its slice of the
+    ``index/tombstones`` store (OVERWRITE — a replayed batch rewrites
+    only its own slice; the request-path ``ivf_index_erase`` appends
+    to the reserved slice ``REQUEST_SLICE``, which no streamed batch
+    overwrites). Serving after the stream drains goes through the
     ordinary tombstone-aware ``ivf_index_topk`` and equals the
     erased-index serve bit-for-bit, so the batch erasure entry's
     replay oracle attaches verbatim.
@@ -351,8 +344,9 @@ def run_streaming_ivf_erasure(
         ).repartition(n_batches).write.mode("overwrite").parquet(staged)
 
     def ingest(batch_df, batch_id):
-        batch_df.select("vec_id").write.mode("overwrite").parquet(
-            os.path.join(index, "tombstones", f"batch={batch_id}")
+        write_slice(
+            batch_df.select("vec_id"),
+            os.path.join(index, "tombstones"), batch_id,
         )
 
     run_microbatches(

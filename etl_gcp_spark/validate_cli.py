@@ -45,16 +45,19 @@ def main(argv: list[str] | None = None) -> int:
     )
     from etl_gcp_spark.sources.readers import load_table
 
-    # reuse an active session if the caller has one (and leave it
-    # running); only stop a session this CLI itself created
-    owned = SparkSession.getActiveSession() is None
-    spark = (
-        SparkSession.builder.master("local[*]")
-        .appName("etl-gcp-spark-validate")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    # reuse an active session if the caller has one, as it is (a
+    # builder .config() would write onto it) and leave it running;
+    # only configure and stop a session this CLI itself created
+    spark = SparkSession.getActiveSession()
+    owned = spark is None
+    if owned:
+        spark = (
+            SparkSession.builder.master("local[*]")
+            .appName("etl-gcp-spark-validate")
+            .config("spark.sql.shuffle.partitions", "32")
+            .config("spark.ui.enabled", "false")
+            .getOrCreate()
+        )
     try:
         pairs = [d.split(":") for d in args.distinct]
         df = load_table(spark, args.sf_dir, args.table)

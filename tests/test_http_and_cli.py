@@ -84,3 +84,18 @@ def test_validate_cli_exit_codes(sf_dir):
     assert (
         main([sf_dir, "--table", "events", "--distinct", "user_id:2"]) == 0
     )
+
+
+def test_validate_cli_leaves_caller_conf(spark, sf_dir):
+    """Run on the caller's running session, the CLI must not write its
+    own shuffle-partition count (32) onto it."""
+    from etl_gcp_spark.validate_cli import main
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "5")
+    try:
+        assert main([sf_dir, "--table", "nation", "--min-rows", "1"]) == 0
+        assert spark.conf.get(key) == "5"
+    finally:
+        spark.conf.set(key, prev)

@@ -161,10 +161,10 @@ def test_streaming_datasource_consumes_waves_incrementally(
     every batch output contains rows of ONE wave only (the second
     pass starts from the committed offset, never re-reads wave 1),
     and the union equals the full table."""
-    import glob as _glob
     import os as _os
 
     from etl_gcp_spark.sources.pyds import stream_chunk_ingest
+    from etl_gcp_spark.streaming.staging import read_slices
 
     df = spark.createDataFrame(
         [(i, f"n{i}", i % 3) for i in range(25)],
@@ -176,10 +176,8 @@ def test_streaming_datasource_consumes_waves_incrementally(
     assert sorted(r.k for r in out.collect()) == list(range(25))
 
     per_batch = {}
-    for d in sorted(_glob.glob(_os.path.join(root, "out", "b*"))):
-        ks = {r.k for r in spark.read.parquet(d).collect()}
-        if ks:
-            per_batch[_os.path.basename(d)] = ks
+    for r in read_slices(spark, _os.path.join(root, "out")).collect():
+        per_batch.setdefault(r.batch, set()).add(r.k)
     assert len(per_batch) == 2
     batches = sorted(per_batch)
     assert per_batch[batches[0]] == set(range(13))
@@ -482,6 +480,7 @@ def test_entity_compact_maskkey_erasure_survives_column_reorder(
 
     from etl_gcp_spark.operators.linkage import mask_key_index
     from etl_gcp_spark.streaming.entities import entity_labels_compact
+    from etl_gcp_spark.streaming.staging import write_slice
 
     root = str(tmp_path / "mk_reorder")
     cust = (
@@ -504,7 +503,7 @@ def test_entity_compact_maskkey_erasure_survives_column_reorder(
         F.col("c_custkey").alias("id")
     )
     assert erased.count() > 0
-    erased.write.parquet(os.path.join(root, "tombstones", "batch=0"))
+    write_slice(erased, os.path.join(root, "tombstones"), 0)
     entity_labels_compact(spark, root)
     mk = spark.read.parquet(os.path.join(root, "maskkeys", "base"))
     assert mk.filter(F.col("c_custkey") % 5 == 0).count() == 0
@@ -522,6 +521,7 @@ def test_entity_compact_rejects_contract_violating_maskkey_store(
     import pytest
 
     from etl_gcp_spark.streaming.entities import entity_labels_compact
+    from etl_gcp_spark.streaming.staging import write_slice
 
     root = str(tmp_path / "mk_bad")
     spark.createDataFrame(
@@ -532,8 +532,9 @@ def test_entity_compact_rejects_contract_violating_maskkey_store(
         "id long, __t string, __k long, extra2 string,"
         " extra3 string",
     ).write.parquet(os.path.join(root, "maskkeys", "base"))
-    spark.createDataFrame([(1,)], "id long").write.parquet(
-        os.path.join(root, "tombstones", "batch=0")
+    write_slice(
+        spark.createDataFrame([(1,)], "id long"),
+        os.path.join(root, "tombstones"), 0,
     )
     with pytest.raises(ValueError, match="mask_key_index"):
         entity_labels_compact(spark, root)
@@ -550,6 +551,7 @@ def test_entity_compact_names_legacy_maskkey_layout(spark, tmp_path):
     import pytest
 
     from etl_gcp_spark.streaming.entities import entity_labels_compact
+    from etl_gcp_spark.streaming.staging import write_slice
 
     root = str(tmp_path / "mk_legacy")
     spark.createDataFrame(
@@ -559,8 +561,9 @@ def test_entity_compact_names_legacy_maskkey_layout(spark, tmp_path):
         [(1, "a", 0, "mask")],
         "id long, __t string, pos int, mkey string",
     ).write.parquet(os.path.join(root, "maskkeys", "base"))
-    spark.createDataFrame([(1,)], "id long").write.parquet(
-        os.path.join(root, "tombstones", "batch=0")
+    write_slice(
+        spark.createDataFrame([(1,)], "id long"),
+        os.path.join(root, "tombstones"), 0,
     )
     with pytest.raises(ValueError, match="rebuild required"):
         entity_labels_compact(spark, root)

@@ -13,7 +13,7 @@ from pyspark.sql import Row
 
 from etl_gcp_spark.operators.clean import clean, normalize_columns
 from etl_gcp_spark.operators.dedup import dedup, dup_count
-from etl_gcp_spark.schemas import normalize_name, schema_diff
+from etl_gcp_spark.schemas import normalize_name
 
 # ---------------------------------------------------------- pure python
 
@@ -32,15 +32,6 @@ def test_normalize_name_idempotent(name):
     assert normalize_name(once) == once
     assert " " not in once and "-" not in once and "." not in once
     assert once == once.lower()
-
-
-@settings(deadline=None)
-@given(st.lists(st.sampled_from("abcdefgh"), min_size=1, max_size=8, unique=True))
-def test_schema_diff_reflexive(cols):
-    from pyspark.sql import types as T
-
-    schema = T.StructType([T.StructField(c, T.LongType()) for c in cols])
-    assert schema_diff(schema, schema).compatible
 
 
 # ------------------------------------------------------------- spark

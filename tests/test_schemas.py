@@ -2,8 +2,8 @@
 
 Covers the reference's contracts: name normalization charset
 (data_extractor.py:387-390), dtype map with TEXT fallback
-(data_extractor.py:340-353), normalization-aware diff ignoring
-metadata columns (data_extractor.py:296-312). Pure Python — no SparkSession needed.
+(data_extractor.py:340-353), and the metadata-column contract. Pure
+Python — no SparkSession needed.
 """
 
 from __future__ import annotations
@@ -12,9 +12,7 @@ from pyspark.sql import types as T
 
 from etl_gcp_spark.schemas import (
     METADATA_COLUMNS,
-    SchemaDiff,
     normalize_name,
-    schema_diff,
     spark_type_for_pandas,
 )
 
@@ -37,33 +35,6 @@ def test_dtype_map_and_fallback():
     assert spark_type_for_pandas("category") == T.StringType()
     # TEXT fallback for anything unknown
     assert spark_type_for_pandas("complex128") == T.StringType()
-
-
-def _st(*fields: tuple[str, T.DataType]) -> T.StructType:
-    return T.StructType([T.StructField(n, t, True) for n, t in fields])
-
-
-def test_schema_diff_compatible_ignores_metadata_and_case():
-    existing = _st(
-        ("year_start", T.LongType()),
-        ("topic", T.StringType()),
-        ("loaded_at", T.TimestampType()),
-        ("load_date", T.DateType()),
-    )
-    incoming = _st(("Year Start", T.LongType()), ("Topic", T.StringType()))
-    d = schema_diff(existing, incoming)
-    assert d.compatible
-    assert isinstance(d, SchemaDiff)
-
-
-def test_schema_diff_reports_all_three_classes():
-    existing = _st(("a", T.LongType()), ("b", T.StringType()))
-    incoming = _st(("b", T.LongType()), ("c", T.DoubleType()))
-    d = schema_diff(existing, incoming)
-    assert d.missing_in_existing == ["c"]
-    assert d.missing_in_incoming == ["a"]
-    assert d.type_mismatches == [("b", "string", "bigint")]
-    assert not d.compatible
 
 
 def test_metadata_columns_contract():

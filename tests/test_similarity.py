@@ -1254,6 +1254,7 @@ def test_ivf_compact_replay_after_crash_window_no_duplicates(
         ivf_index_compact,
         ivf_index_topk,
     )
+    from etl_gcp_spark.streaming.staging import write_slice
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     path = str(tmp_path / "ivfcrash")
@@ -1275,9 +1276,7 @@ def test_ivf_compact_replay_after_crash_window_no_duplicates(
         [int(r["cell"]) for r in cents],
         "vec_id",
     ).select("vec_id", F.col("__v").alias("vector"), "cell")
-    assigned.write.partitionBy("cell").parquet(
-        os.path.join(appends, "batch=0")
-    )
+    write_slice(assigned, appends, 0, partition_by=("cell",))
     saved = str(tmp_path / "appends_saved")
     shutil.copytree(appends, saved)
     ivf_index_compact(spark, path)
@@ -1318,6 +1317,7 @@ def test_ivf_retrain_swap_replay_after_crash_window_no_duplicates(
         build_ivf_index,
         ivf_retrain_swap,
     )
+    from etl_gcp_spark.streaming.staging import write_slice
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     path = str(tmp_path / "ivfretrcrash")
@@ -1330,16 +1330,15 @@ def test_ivf_retrain_swap_replay_after_crash_window_no_duplicates(
         spark.read.parquet(os.path.join(path, "centroids")).collect(),
         key=lambda r: r["cell"],
     )
-    _assign_to_centroids(
+    assigned = _assign_to_centroids(
         emb.filter(F.col("vec_id") >= 400).select(
             "vec_id", F.col("embedding").alias("__v")
         ),
         [list(r["centroid"]) for r in cents],
         [int(r["cell"]) for r in cents],
         "vec_id",
-    ).select("vec_id", F.col("__v").alias("vector"), "cell").write.partitionBy(
-        "cell"
-    ).parquet(os.path.join(appends, "batch=0"))
+    ).select("vec_id", F.col("__v").alias("vector"), "cell")
+    write_slice(assigned, appends, 0, partition_by=("cell",))
     saved = str(tmp_path / "retr_appends_saved")
     shutil.copytree(appends, saved)
     ivf_retrain_swap(spark, path, n_cells=8, n_iters=1)
@@ -1518,6 +1517,7 @@ def test_ivf_compact_fold_keeps_committed_base_cells(
         ivf_index_compact,
         ivf_retrain_swap,
     )
+    from etl_gcp_spark.streaming.staging import write_slice
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     path = str(tmp_path / "ivf_fold_det")
@@ -1530,16 +1530,15 @@ def test_ivf_compact_fold_keeps_committed_base_cells(
         spark.read.parquet(os.path.join(path, "centroids")).collect(),
         key=lambda r: r["cell"],
     )
-    _assign_to_centroids(
+    assigned = _assign_to_centroids(
         emb.filter(F.col("vec_id") >= 400).select(
             "vec_id", F.col("embedding").alias("__v")
         ),
         [list(r["centroid"]) for r in cents],
         [int(r["cell"]) for r in cents],
         "vec_id",
-    ).select("vec_id", F.col("__v").alias("vector"), "cell").write.partitionBy(
-        "cell"
-    ).parquet(os.path.join(appends, "batch=0"))
+    ).select("vec_id", F.col("__v").alias("vector"), "cell")
+    write_slice(assigned, appends, 0, partition_by=("cell",))
     saved = str(tmp_path / "fold_appends_saved")
     shutil.copytree(appends, saved)
     # retrain folds the appends in under NEW centroids/cells
